@@ -898,9 +898,11 @@ def _bpe_count_sql() -> str:
     sequential reference; this replay is pinned by the bpe_pack_plan
     parity row itself."""
     sep = "\x1f"
+    # 's': without it DuckDB's '.' skips '\n', gluing a newline to the
+    # next symbol instead of making it one of its own
     enc = (
         f"concat('{sep}{sep}', "
-        f"regexp_replace(word, '(.)', '\\1{sep}{sep}', 'g'))"
+        f"regexp_replace(word, '(.)', '\\1{sep}{sep}', 'gs'))"
     )
     for a, b in tokenizer.DEMO_MERGES:
         enc = (

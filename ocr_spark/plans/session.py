@@ -96,15 +96,10 @@ def build_submit_session(
     would silently override the launcher's), while the workload conf
     (AQE, Arrow batching, shuffle width, executor BLAS pinning) is the
     same tuned set as :func:`build_session`. Driver-side BLAS pinning
-    still happens here — spark-submit does not export it."""
-    for var in (
-        "OMP_NUM_THREADS",
-        "OPENBLAS_NUM_THREADS",
-        "MKL_NUM_THREADS",
-        "NUMEXPR_NUM_THREADS",
-        "VECLIB_MAXIMUM_THREADS",
-    ):
-        os.environ.setdefault(var, "1")
+    cannot happen here: OpenBLAS reads its thread env once, when numpy
+    loads, and the job's ``ocr_spark`` imports have loaded it by the
+    time this runs. A submitted script pins it before its first
+    ``ocr_spark`` import, as ``jobs/bench_extract.py`` does."""
     b = _tuned_conf(SparkSession.builder.appName(app_name), shuffle_partitions)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

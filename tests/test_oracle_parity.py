@@ -153,3 +153,32 @@ def test_gate_window_covers_every_family():
 def test_entry_smoke(spark):
     df = entry.entry(spark)
     assert df.count() > 0
+
+
+def test_bpe_pack_plan_newline_word_matches_oracle(spark, tmp_path):
+    """A word with an embedded newline is one more symbol on both
+    engines: the oracle's per-character split must match '\\n' too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = ["line one\nline two", "ab\ncd ef", "a\n\nb c", "plain text here"]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(texts)), pa.int64()),
+                "text": texts,
+                "lang": ["en"] * len(texts),
+                "source": ["s"] * len(texts),
+                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    sdf = entry.queries()["bpe_pack_plan"](spark, str(tmp_path))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    res = con.execute(entry.oracle_sql()["bpe_pack_plan"])
+    duck_cols = [d[0] for d in res.description]
+    assert _canon(sdf.columns, [tuple(r) for r in sdf.collect()]) == _canon(
+        duck_cols, res.fetchall()
+    )
