@@ -16,7 +16,7 @@ directly):
   the reference multiplies into its training images.
 
 These run BEFORE recognition as an optional stage:
-``box_probs(..., weights)`` applies them when the broadcast weights
+``box_probs_batch(..., weights)`` applies them when the broadcast weights
 dict carries ``preclean: 'sobel'|'contrast'`` — OFF by default, so
 the frozen fixtures are unaffected; the kernels are gated by their
 own unit tests (tests/test_preclean.py). At 100 TB this is per-crop
@@ -69,7 +69,7 @@ def contrast_mask(img: np.ndarray, size: int = 15) -> np.ndarray:
 
 
 def apply_preclean(img: np.ndarray, mode: str | None) -> np.ndarray:
-    """Dispatch used by box_probs: None/'' = no-op; 'sobel' multiplies
+    """Dispatch used by box_probs_batch: None/'' = no-op; 'sobel' multiplies
     the edge mask in (keeps strokes, kills flat noise); 'contrast'
     multiplies the soft contrast mask."""
     if not mode:

@@ -1,16 +1,19 @@
-"""Arrow-batch extraction kernels (pandas in, pandas out — no Spark
-imports, so unit tests run without a JVM).
+"""Arrow-batch extraction kernels (no Spark imports, so unit tests
+run without a JVM).
 
-Two granularities, both produced by the same per-span primitives:
+Two granularities, both built from the same batch primitives — text
+spans cleaned VECTORIZED across the whole batch (``clean_text_spans``,
+one str.translate over every text span), media spans through the OCR
+chain batched across the whole batch (``extract_media_spans_batch``):
 
-- ``extract_doc_batch``: whole documents per row (light path). Text
-  spans are cleaned VECTORIZED across the whole Arrow batch (one
-  str.translate over every text span of every document in the batch);
-  media spans run the per-page OCR chain.
-- ``extract_span_batch``: one span per row (heavy path, used after
-  exploding media-heavy documents). Emits a ``seq`` column (position
-  within the span); the global ``order`` is restored by a window on
-  (doc_id ORDER BY offset, seq) in the Spark plan.
+- ``extract_doc_batch_arrow``: whole documents per row, pa.RecordBatch
+  in and out (light path, mapInArrow). The within-document ``order`` is
+  computed in the kernel.
+- ``extract_span_batch``: one span per row, pandas in and out (heavy
+  path, mapInPandas after exploding media-heavy documents). Emits a
+  ``seq`` column (position within the span); the global ``order`` is
+  restored by a window on (doc_id ORDER BY offset, seq) in the Spark
+  plan.
 """
 
 from __future__ import annotations
@@ -20,12 +23,8 @@ from collections.abc import Iterator
 import pandas as pd
 
 from ocr_spark.functions.text_clean import clean_text_series, has_cjk_series
-from ocr_spark.operators.postprocess import (
-    extract_media_span,
-    extract_media_spans_batch,
-)
+from ocr_spark.operators.postprocess import extract_media_spans_batch
 
-OUT_COLUMNS = ["doc_id", "order", "kind", "text", "media_ref"]
 SPAN_OUT_COLUMNS = ["doc_id", "offset", "seq", "kind", "text", "media_ref"]
 
 
@@ -36,51 +35,6 @@ def clean_text_spans(raw: pd.Series) -> tuple[pd.Series, pd.Series]:
     cleaned = clean_text_series(raw)
     keep = (cleaned != "") & (~has_cjk_series(cleaned))
     return cleaned, keep
-
-
-def extract_doc_batch(
-    batches: Iterator[pd.DataFrame], weights: dict | None = None
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (doc_id, spans) -> exploded extracted spans.
-
-    ``weights``: broadcast model-weights dict (sources/weights.py),
-    fetched once per worker by the plan layer; None = defaults."""
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        # flatten every span of the batch into one frame
-        recs = []
-        for row_i, (doc_id, spans) in enumerate(zip(pdf["doc_id"], pdf["spans"])):
-            for s in spans:
-                recs.append((doc_id, row_i, s["kind"], s["text"], s["media_ref"], s["offset"]))
-        if not recs:
-            continue
-        flat = pd.DataFrame(recs, columns=["doc_id", "row", "kind", "text", "media_ref", "offset"])
-        flat.sort_values(["row", "offset"], inplace=True, kind="stable")
-
-        is_text = flat["kind"] == "text"
-        cleaned = pd.Series("", index=flat.index, dtype=object)
-        keep = pd.Series(False, index=flat.index)
-        if is_text.any():
-            c, k = clean_text_spans(flat.loc[is_text, "text"])
-            cleaned.loc[is_text] = c
-            keep.loc[is_text] = k
-
-        out_rows = []
-        for doc_id, grp in flat.groupby("row", sort=True):
-            order = 0
-            did = grp["doc_id"].iloc[0]
-            for idx in grp.index:
-                if flat.at[idx, "kind"] == "text":
-                    if keep.at[idx]:
-                        out_rows.append((did, order, "text", cleaned.at[idx], ""))
-                        order += 1
-                else:
-                    ref = flat.at[idx, "media_ref"]
-                    for text in extract_media_span(ref, weights):
-                        out_rows.append((did, order, "media", text, ref))
-                        order += 1
-        yield pd.DataFrame(out_rows, columns=OUT_COLUMNS)
 
 
 def extract_span_batch(
@@ -120,12 +74,17 @@ def extract_span_batch(
 
 
 def extract_doc_batch_arrow(batches, weights: dict | None = None):
-    """mapInArrow kernel (Iterator[pa.RecordBatch] -> same): identical
-    rows to ``extract_doc_batch``, but the spans list<struct> column is
-    flattened with Arrow offsets instead of materializing a Python
-    dict per span — the Arrow->pandas conversion of nested structs was
-    the dominant per-document overhead in the Spark path (~8 ms/doc
-    measured; the OCR kernel itself is ~4.5 ms/doc).
+    """mapInArrow kernel (Iterator[pa.RecordBatch] -> same):
+    (doc_id, spans) -> one row per extracted span (doc_id, order, kind,
+    text, media_ref), ``order`` counting a document's kept spans in
+    offset order. The spans list<struct> column is flattened with Arrow
+    offsets instead of materializing a Python dict per span — the
+    Arrow->pandas conversion of nested structs was the dominant
+    per-document overhead in the Spark path (~8 ms/doc measured; the
+    OCR kernel itself is ~4.5 ms/doc).
+
+    ``weights``: broadcast model-weights dict (sources/weights.py),
+    fetched once per worker by the plan layer; None = defaults.
 
     Output assembly is fully vectorized: per-span emit counts ->
     np.repeat/cumsum for row indices and the within-document ``order``

@@ -238,8 +238,11 @@ def extract_media_spans_batch(
     16%, the beam retry 5%, greedy decode, verdicts and routing under
     2%.
 
-    Output is bit-identical to per-page extraction (asserted by
-    test_extraction)."""
+    A page's texts do not depend on the other pages of the call
+    (asserted by test_crnn and test_extraction). ``weights`` is the
+    broadcast model-weights dict (sources/weights.py); None = module
+    defaults (identical output — the default projection is the identity
+    on the 21-class alphabet)."""
     out: list[list[str]] = []
     for s in range(0, len(media_refs), _PAGE_CHUNK):
         chunk = media_refs[s : s + _PAGE_CHUNK]
@@ -251,13 +254,3 @@ def extract_media_spans_batch(
             for _, nodes, forests in preps
         )
     return out
-
-
-def extract_media_span(media_ref: str, weights: dict | None = None) -> list[str]:
-    """Full OCR chain for one media span: recipe -> detect -> layout ->
-    recognize -> route -> splice. Returns ordered span texts.
-
-    ``weights`` is the broadcast model-weights dict
-    (sources/weights.py); None = module defaults (identical output —
-    the default projection is the identity on the 21-class alphabet)."""
-    return extract_media_spans_batch([media_ref], weights)[0]

@@ -7,9 +7,9 @@ local[N]):
       ├── light docs (media spans <= HEAVY_MEDIA_SPANS)
       │     [salted repartition on pmod(xxhash64(doc_id), buckets)
       │      — only when needed, see below]
-      │     -> mapInPandas(extract_doc_batch)          [no shuffle after]
+      │     -> mapInArrow(extract_doc_batch_arrow)     [no shuffle after]
       └── heavy docs (the ~1% media-heavy skew tail)
-            posexplode(spans)  -> per-SPAN rows         [splits hot docs]
+            explode(spans)     -> per-SPAN rows         [splits hot docs]
             repartition on xxhash64(doc_id, offset)     [uniform units]
             -> mapInPandas(extract_span_batch)
             -> window row_number() over (doc_id ORDER BY offset, seq)
@@ -473,8 +473,7 @@ def extract(
         light = light.repartition(buckets, F.pmod(F.xxhash64("doc_id"), F.lit(buckets)))
     # mapInArrow: the spans list<struct> flattens via Arrow offsets in
     # the kernel, skipping the per-span Python-dict materialization
-    # that Arrow->pandas conversion would do (extract_doc_batch is the
-    # pandas twin, kept for unit tests and as the reference semantics)
+    # that Arrow->pandas conversion would do
     light = light.mapInArrow(_doc_kernel, schema=OUT_SCHEMA)
 
     heavy_spans = (

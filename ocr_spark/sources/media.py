@@ -161,43 +161,20 @@ def _inject_corruption(
     return probs
 
 
-def box_probs(page: Page, bbox, weights: dict | None = None) -> np.ndarray:
-    """CTC probabilities for recognizing the given crop of a page —
-    REAL compute since round 2: the gold label is rendered to pixels
-    (the sandbox twin of cropping the image) and pushed through the
-    conv + recurrence + classifier forward pass
-    (ocr_spark.functions.crnn, reference model.py:93-218), so T is the
-    reference's width-dependent sequence_length, not a synthetic frame
-    pattern. ``weights``: the broadcast model-weights dict
-    (sources/weights.py); None builds/reuses the process-local default
-    (same values — the oracle transcription path)."""
-    from ocr_spark.functions.crnn import forward_probs, render_label  # noqa: PLC0415
-
-    if weights is None or "conv1" not in weights:
-        from ocr_spark.sources.weights import default_weights  # noqa: PLC0415
-
-        weights = default_weights()
-    label = read_label(page, bbox)
-    seed = stable_seed(
-        "probs", page.media_ref, int(bbox[0]), int(bbox[1]), int(bbox[2]), int(bbox[3])
-    )
-    rng = np.random.default_rng(seed)
-    img = render_label(label, seed=seed)
-    if weights.get("preclean"):  # F19 optional pre-clean stage (off by default)
-        from ocr_spark.functions.preclean import apply_preclean  # noqa: PLC0415
-
-        img = apply_preclean(img, weights["preclean"])
-    probs = forward_probs(img, weights)
-    return _inject_corruption(probs, label, rng)
-
-
 def box_probs_batch(items: list, weights: dict | None = None) -> list:
-    """Batched ``box_probs``: ``items`` is a list of (page, bbox); the
-    per-crop render/seed/corruption stays exactly the single-crop
-    computation, but the forward pass runs width-bucketed across the
-    whole list (crnn.forward_probs_batch) — one BLAS matmul per conv /
-    classifier per bucket instead of per crop. Returns per-item [T, C]
-    matrices in input order, identical values to ``box_probs``."""
+    """CTC probabilities for recognizing crops of pages — REAL compute
+    since round 2. ``items`` is a list of (page, bbox); each crop's gold
+    label is rendered to pixels (the sandbox twin of cropping the image)
+    with a seed keyed on (media_ref, bbox), optionally pre-cleaned (F19,
+    ``weights['preclean']``, off by default), and pushed through the
+    conv + recurrence + classifier forward pass
+    (crnn.forward_probs_batch, reference model.py:93-218), so T is the
+    reference's width-dependent sequence_length, not a synthetic frame
+    pattern; then the seeded corruption injector runs per crop.
+    ``weights``: the broadcast model-weights dict (sources/weights.py);
+    None builds/reuses the process-local default (same values — the
+    oracle transcription path). Returns per-item [T, C] matrices in
+    input order; a crop's matrix does not depend on the other items."""
     from ocr_spark.functions.crnn import forward_probs_batch, render_label  # noqa: PLC0415
 
     if weights is None or "conv1" not in weights:

@@ -86,7 +86,7 @@ def test_shiftsum_head_equals_stacked(weights):
     ~1 MB/crop context materialization without touching decode."""
     for i, lab in enumerate(["12+3=15", "", "9", "(4+5", "123÷4=30*3"]):
         img = crnn.render_label(lab, seed=i)
-        feats = crnn.recurrent_mix(crnn.conv_features(img, weights), weights["wh"])
+        feats = crnn.recurrent_mix(crnn.conv_features(img, weights)[None], weights["wh"])[0]
         assert np.array_equal(
             crnn.class_probs(feats, weights),
             crnn._class_probs_stacked(feats, weights),
@@ -101,40 +101,49 @@ def test_char_frame_range_covers_glyphs(weights):
     assert 0 <= r0[0] < r0[1] < r1[0] < r1[1] <= t_total - 1
 
 
-@pytest.mark.parametrize("max_crops", [1, 8])
-def test_batched_forward_bit_identical(weights, monkeypatch, max_crops):
-    """The width-bucketed batched forward pass (forward_probs_batch)
-    returns BIT-IDENTICAL matrices to the per-crop path for every crop
-    — the property that lets the extraction kernels batch recognition
-    across the whole Arrow batch without touching the frozen
-    fixtures. Mixed widths exercise bucketing; >max_crops of one width
-    exercises sub-batch chunking. Parametrized over the sub-batch cap
-    so the N>1 stacked-GEMM path is exercised even though the
-    environment default is OCR_SPARK_MAX_CROPS=1 (the env knob
-    ab_maxcrops.py benchmarks)."""
-    monkeypatch.setattr(crnn, "_MAX_CROPS", max_crops)
+def _assert_batch_equals_singles(imgs, weights, variant="base"):
+    batched = crnn.forward_probs_batch(imgs, weights, variant)
+    assert len(batched) == len(imgs)
+    for i, img in enumerate(imgs):
+        assert np.array_equal(batched[i], crnn.forward_probs(img, weights, variant)), i
+
+
+def test_batched_forward_bit_identical(weights, monkeypatch):
+    """The width-bucketed batched forward pass returns BIT-IDENTICAL
+    matrices to batches of one for every crop — the property that lets
+    the extraction kernels batch recognition across the whole Arrow
+    batch without touching the frozen fixtures. Mixed widths exercise
+    shape grouping; 11 crops of one width at a recurrence chunk of 4
+    cross two chunk boundaries (one partial chunk)."""
+    monkeypatch.setattr(crnn, "_REC_BATCH", 4)
     labels = ["12+3=15", "7×8=56", "", "9", "(4+5", "123÷4=30*3"]
     imgs = [crnn.render_label(lab, seed=100 + i) for i, lab in enumerate(labels)]
-    imgs += [crnn.render_label("5×5=25", seed=i) for i in range(max_crops + 3)]
-    batched = crnn.forward_probs_batch(imgs, weights)
-    for i, img in enumerate(imgs):
-        assert np.array_equal(batched[i], crnn.forward_probs(img, weights)), i
+    imgs += [crnn.render_label("5×5=25", seed=i) for i in range(11)]
+    _assert_batch_equals_singles(imgs, weights)
+
+
+def test_batched_forward_fraction_variant(w_fraction, monkeypatch):
+    """The fraction variant's pair smoothing runs inside the batched
+    pass: a mixed-width batch that crosses recurrence chunks equals its
+    batches of one."""
+    monkeypatch.setattr(crnn, "_REC_BATCH", 4)
+    labels = ["67+25=92", "9", "(3+4)×2=14", "72÷8=9", "100÷7=14~2"]
+    imgs = [crnn.render_label(lab, seed=300 + i) for i, lab in enumerate(labels)]
+    imgs += [crnn.render_label("8×9=72", seed=i) for i in range(6)]
+    _assert_batch_equals_singles(imgs, w_fraction, "fraction")
 
 
 def test_batched_span_extraction_matches_single():
-    """extract_media_spans_batch == [extract_media_span(r) for r] —
-    the whole chain (render, corruption injection, routing, splice,
-    beam backups) is invariant to cross-page batching."""
-    from ocr_spark.operators.postprocess import (
-        extract_media_span,
-        extract_media_spans_batch,
-    )
+    """extract_media_spans_batch(refs) == one call per ref — the whole
+    chain (render, corruption injection, routing, splice, beam backups)
+    is invariant to cross-page batching."""
+    from ocr_spark.operators.postprocess import extract_media_spans_batch
     from ocr_spark.sources.weights import default_weights
 
     w = default_weights()
     refs = [f"m-{i:012d}" for i in range(40)]
     batched = extract_media_spans_batch(refs, w)
-    single = [extract_media_span(r, w) for r in refs]
+    single = [extract_media_spans_batch([r], w)[0] for r in refs]
     assert batched == single
 
 
@@ -196,7 +205,7 @@ def test_variant_decode_fidelity(variant, w_conv9, w_fraction):
     """Greedy decode through each variant stack recovers the rendered
     label exactly, including the quirk alphabet (remainder '~',
     operators, brackets). The fraction variant additionally exercises
-    its pair-consistency smoothing (forward_probs docstring) — without
+    its pair-consistency smoothing (in forward_probs_batch) — without
     it, 36% of random labels decode with doubled characters."""
     wv = w_conv9 if variant == "conv9" else w_fraction
     labels = [

@@ -1,16 +1,56 @@
-"""Document-level extraction vs frozen oracle fixtures — pandas-only
-(no JVM): exercises the same batch kernels the Spark plan wraps."""
+"""Document-level extraction vs frozen oracle fixtures — no JVM: drives
+the same batch kernels the Spark plan wraps (``extract_doc_batch_arrow``
+through pa.RecordBatch, ``extract_span_batch`` through pandas)."""
 
 import os
 
 import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from ocr_spark.operators.extract_batch import extract_doc_batch, extract_span_batch
+from ocr_spark.operators.extract_batch import extract_doc_batch_arrow, extract_span_batch
 from ocr_spark.sources.corpus import doc_ids, doc_spans
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "expected_spans.parquet")
+SPAN_T = pa.struct(
+    [("kind", pa.string()), ("text", pa.string()),
+     ("media_ref", pa.string()), ("offset", pa.int32())]
+)
+KEY = ["doc_id", "order"]
+
+
+def _record_batch(ids, spans) -> pa.RecordBatch:
+    return pa.RecordBatch.from_pydict(
+        {"doc_id": pa.array(ids, pa.string()), "spans": pa.array(spans, pa.list_(SPAN_T))}
+    )
+
+
+def _doc_kernel(docs, split: int | None = None) -> pd.DataFrame:
+    """Run the Arrow doc kernel over ``docs`` (ids, spans), one
+    RecordBatch or ``split``-row batches; rows sorted by (doc_id, order)."""
+    ids, spans = docs
+    step = split or max(len(ids), 1)
+    batches = [_record_batch(ids[i : i + step], spans[i : i + step]) for i in range(0, len(ids), step)]
+    out = pa.Table.from_batches(list(extract_doc_batch_arrow(iter(batches)))).to_pandas()
+    return out.sort_values(KEY, ignore_index=True)
+
+
+def _span_kernel(docs, split: int | None = None) -> pd.DataFrame:
+    """Run the heavy-path span kernel over ``docs`` exploded to one span
+    per row, and restore ``order`` as the plan's window does."""
+    recs = [
+        (did, s["kind"], s["text"], s["media_ref"], s["offset"])
+        for did, spans in zip(*docs)
+        for s in spans
+    ]
+    flat = pd.DataFrame(recs, columns=["doc_id", "kind", "text", "media_ref", "offset"])
+    step = split or len(flat)
+    chunks = [flat.iloc[i : i + step] for i in range(0, len(flat), step)]
+    out = pd.concat(list(extract_span_batch(iter(chunks))), ignore_index=True)
+    out = out.sort_values(["doc_id", "offset", "seq"], ignore_index=True)
+    out["order"] = out.groupby("doc_id").cumcount().astype("int32")
+    return out[["doc_id", "order", "kind", "text", "media_ref"]]
 
 
 @pytest.fixture(scope="module")
@@ -21,13 +61,16 @@ def expected():
 @pytest.fixture(scope="module")
 def docs():
     ids = doc_ids(400)
-    return pd.DataFrame({"doc_id": ids, "spans": [doc_spans(d) for d in ids]})
+    return ids, [doc_spans(d) for d in ids]
+
+
+def _head(docs, n):
+    return docs[0][:n], docs[1][:n]
 
 
 def test_doc_batch_matches_fixtures(expected, docs):
-    out = pd.concat(list(extract_doc_batch(iter([docs]))), ignore_index=True)
-    out = out.sort_values(["doc_id", "order"], ignore_index=True)
-    exp = expected.sort_values(["doc_id", "order"], ignore_index=True)
+    out = _doc_kernel(docs)
+    exp = expected.sort_values(KEY, ignore_index=True)
     assert len(out) == len(exp)
     for col in ["doc_id", "order", "kind", "text", "media_ref"]:
         mism = (out[col].astype(str) != exp[col].astype(str)).sum()
@@ -36,78 +79,37 @@ def test_doc_batch_matches_fixtures(expected, docs):
 
 def test_span_batch_path_equals_doc_batch_path(docs):
     """The heavy (span-exploded) path must produce identical spans."""
-    doc_out = pd.concat(list(extract_doc_batch(iter([docs.iloc[:80]]))), ignore_index=True)
-
-    recs = []
-    for did, spans in zip(docs["doc_id"].iloc[:80], docs["spans"].iloc[:80]):
-        for s in spans:
-            recs.append((did, s["kind"], s["text"], s["media_ref"], s["offset"]))
-    flat = pd.DataFrame(recs, columns=["doc_id", "kind", "text", "media_ref", "offset"])
-    span_out = pd.concat(list(extract_span_batch(iter([flat]))), ignore_index=True)
-    span_out = span_out.sort_values(["doc_id", "offset", "seq"], ignore_index=True)
-    span_out["order"] = span_out.groupby("doc_id").cumcount()
-
-    a = doc_out.sort_values(["doc_id", "order"], ignore_index=True)
-    b = span_out[["doc_id", "order", "kind", "text", "media_ref"]].sort_values(
-        ["doc_id", "order"], ignore_index=True
-    )
-    pd.testing.assert_frame_equal(a, b.astype(a.dtypes.to_dict()))
+    head = _head(docs, 80)
+    pd.testing.assert_frame_equal(_span_kernel(head), _doc_kernel(head))
 
 
 def test_batch_invariance(docs):
-    """Splitting the input into different Arrow-batch sizes must not
-    change results (ordering is per-document, not per-batch)."""
-    head = docs.iloc[:40]
-    whole = pd.concat(list(extract_doc_batch(iter([head]))), ignore_index=True)
-    chunks = [head.iloc[i : i + 7] for i in range(0, 40, 7)]
-    split = pd.concat(list(extract_doc_batch(iter(chunks))), ignore_index=True)
-    a = whole.sort_values(["doc_id", "order"], ignore_index=True)
-    b = split.sort_values(["doc_id", "order"], ignore_index=True)
-    pd.testing.assert_frame_equal(a, b)
+    """Splitting the input into different batch sizes must not change
+    either kernel's results (ordering is per-document, not per-batch)."""
+    head = _head(docs, 40)
+    whole = _doc_kernel(head)
+    assert len(whole) > 0
+    pd.testing.assert_frame_equal(_doc_kernel(head, split=7), whole)
+    pd.testing.assert_frame_equal(_span_kernel(head, split=11), _span_kernel(head))
 
 
-def test_arrow_kernel_matches_pandas_kernel():
-    """extract_doc_batch_arrow (mapInArrow fast path) must emit exactly
-    the rows of extract_doc_batch (pandas reference semantics)."""
-    import pandas as pd
-    import pyarrow as pa
-
-    from ocr_spark.operators.extract_batch import (
-        extract_doc_batch,
-        extract_doc_batch_arrow,
-    )
-    from ocr_spark.sources.corpus import doc_spans
-
-    ids = [f"doc-{i:08d}" for i in range(60)]
-    pdf = pd.DataFrame({"doc_id": ids, "spans": [doc_spans(d) for d in ids]})
-    span_t = pa.struct(
-        [("kind", pa.string()), ("text", pa.string()),
-         ("media_ref", pa.string()), ("offset", pa.int32())]
-    )
-    rb = pa.RecordBatch.from_pydict(
-        {
-            "doc_id": pa.array(ids, pa.string()),
-            "spans": pa.array(list(pdf["spans"]), pa.list_(span_t)),
-        }
-    )
-    got_pd = pd.concat(list(extract_doc_batch(iter([pdf])))).reset_index(drop=True)
-    got_ar = pa.Table.from_batches(
-        list(extract_doc_batch_arrow(iter([rb])))
-    ).to_pandas()
-    a = sorted(map(tuple, got_pd.itertuples(index=False)))
-    b = sorted(map(tuple, got_ar.itertuples(index=False)))
-    assert a == b and len(a) > 0
-
-    # empty batch and empty-spans rows
-    empty = pa.RecordBatch.from_pydict(
-        {"doc_id": pa.array([], pa.string()), "spans": pa.array([], pa.list_(span_t))}
-    )
-    assert list(extract_doc_batch_arrow(iter([empty]))) == []
-    nospans = pa.RecordBatch.from_pydict(
-        {"doc_id": pa.array(["d1"]), "spans": pa.array([[]], pa.list_(span_t))}
-    )
-    out = list(extract_doc_batch_arrow(iter([nospans])))
+def test_arrow_kernel_empty_batch_and_empty_spans():
+    """An empty batch emits no batch; a document with no spans emits no
+    rows."""
+    assert list(extract_doc_batch_arrow(iter([_record_batch([], [])]))) == []
+    out = list(extract_doc_batch_arrow(iter([_record_batch(["d1"], [[]])])))
     assert sum(len(x) for x in out) == 0
+
+
+def test_arrow_kernel_sorts_unsorted_offsets(docs):
+    """Spans that arrive out of offset order take the kernel's lexsort
+    branch and emit exactly the rows of the offset-sorted input."""
+    ids, spans = _head(docs, 30)
+    assert any(len(s) > 1 for s in spans)
+    reversed_spans = [list(reversed(s)) for s in spans]
+    got = _doc_kernel((ids, reversed_spans))
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, _doc_kernel((ids, spans)))
 
 
 def test_broadcast_weights_flow_into_recognition():
@@ -117,8 +119,7 @@ def test_broadcast_weights_flow_into_recognition():
     decorative."""
     import numpy as np
 
-    from ocr_spark.operators.postprocess import extract_media_span
-    from ocr_spark.sources.corpus import doc_spans
+    from ocr_spark.operators.postprocess import extract_media_spans_batch
     from ocr_spark.sources.weights import default_weights
 
     refs = [
@@ -128,15 +129,12 @@ def test_broadcast_weights_flow_into_recognition():
         if s["kind"] == "media"
     ]
     w = default_weights()
-    assert all(
-        extract_media_span(r) == extract_media_span(r, w) for r in refs
-    )
+    base = extract_media_spans_batch(refs, w)
+    assert extract_media_spans_batch(refs) == base
 
     perm = default_weights()
     p = np.eye(len(perm["alphabet"]))
     p[[0, 1]] = p[[1, 0]]  # swap classes '1' and '0'
     perm["projection"] = p
-    changed = sum(
-        extract_media_span(r, perm) != extract_media_span(r, w) for r in refs
-    )
+    changed = sum(a != b for a, b in zip(extract_media_spans_batch(refs, perm), base))
     assert changed > 0

@@ -56,22 +56,22 @@ def test_contrast_preclean_preserves_decode():
 
 
 def test_preclean_hook_in_box_probs():
-    """weights['preclean'] flows through box_probs deterministically
+    """weights['preclean'] flows through box_probs_batch deterministically
     and actually changes the probabilities (the stage is load-bearing,
     not decorative)."""
     import numpy as np
 
-    from ocr_spark.sources.media import box_probs, build_page
+    from ocr_spark.sources.media import box_probs_batch, build_page
     from ocr_spark.sources.weights import default_weights
 
     page = build_page("m-preclean-test")
     bbox = page.segments[0].bbox
     w = default_weights()
-    base = box_probs(page, bbox, w)
+    base = box_probs_batch([(page, bbox)], w)[0]
     wc = default_weights()
     wc["preclean"] = "sobel"
-    masked1 = box_probs(page, bbox, wc)
-    masked2 = box_probs(page, bbox, wc)
+    masked1 = box_probs_batch([(page, bbox)], wc)[0]
+    masked2 = box_probs_batch([(page, bbox)], wc)[0]
     assert np.array_equal(masked1, masked2)
     assert base.shape == masked1.shape
     assert not np.array_equal(base, masked1)

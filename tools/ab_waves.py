@@ -44,7 +44,7 @@ def main() -> None:
 
     out = tempfile.mkdtemp(prefix="abwaves_out_")
 
-    # arm -> run_once kwargs (buckets threaded via OCR_SPARK_BUCKETS)
+    # arm -> run_once kwargs
     arms: dict[str, dict] = {
         "default_64": {},
         "buckets_128": {"buckets": 128},

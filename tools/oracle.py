@@ -1,13 +1,15 @@
 """Fixture oracle: faithful SEQUENTIAL transcriptions of the reference
-pipeline's pure-Python decision logic, used ONLY by
-``tools/make_fixtures.py`` at fixture-generation time — never imported
-by the engine or by tests at run time (FIXTURES.md §2).
+pipeline's pure-Python decision logic. ``tools/make_fixtures.py``
+freezes the golden fixtures from it (FIXTURES.md §2), and tests import
+its transcriptions as references for the engine's vectorized forms
+(tests/test_ctc.py, test_layout.py, test_geometry.py). The engine
+never imports it.
 
 This module is deliberately an *independent second implementation* of
 everything the engine vectorizes (ocr_spark.functions / operators), so
 frozen fixtures detect divergence in either. The only shared pieces
 are the synthetic data definitions themselves (build_page /
-detect_page / box_probs / corpus), which are our own design and have a
+detect_page / box_probs_batch / corpus), which are our own design and have a
 single source of truth.
 
 Transcribed behaviors and their reference citations:
@@ -38,7 +40,7 @@ import re
 
 from ocr_spark.config import ALPHABET, BLANK_ID
 from ocr_spark.operators.detect import detect_page
-from ocr_spark.sources.media import box_probs, build_page, read_label
+from ocr_spark.sources.media import box_probs_batch, build_page
 
 _ALLOWED = re.compile(r"[0-9.+\-*/%~() \t]*\Z")
 
@@ -410,7 +412,7 @@ def extract_media_span(media_ref: str) -> list:
         forests = graph_to_forest(column_get_pair(all_nodes), all_nodes)
 
     for node in all_nodes:
-        node.probs = box_probs(page, node.bbox)
+        node.probs = box_probs_batch([(page, node.bbox)])[0]
         node.output = greedy_decode(node.probs)
 
     connect = []
