@@ -108,14 +108,16 @@ def _assert_batch_equals_singles(imgs, weights, variant="base"):
         assert np.array_equal(batched[i], crnn.forward_probs(img, weights, variant)), i
 
 
-def test_batched_forward_bit_identical(weights, monkeypatch):
+@pytest.mark.parametrize("rec_batch", [1, 8])
+def test_batched_forward_bit_identical(weights, monkeypatch, rec_batch):
     """The width-bucketed batched forward pass returns BIT-IDENTICAL
     matrices to batches of one for every crop — the property that lets
     the extraction kernels batch recognition across the whole Arrow
     batch without touching the frozen fixtures. Mixed widths exercise
-    shape grouping; 11 crops of one width at a recurrence chunk of 4
-    cross two chunk boundaries (one partial chunk)."""
-    monkeypatch.setattr(crnn, "_REC_BATCH", 4)
+    shape grouping; 11 crops of one width cross recurrence chunk
+    boundaries: every crop its own chunk at 1, one full and one
+    partial chunk at 8."""
+    monkeypatch.setattr(crnn, "_REC_BATCH", rec_batch)
     labels = ["12+3=15", "7×8=56", "", "9", "(4+5", "123÷4=30*3"]
     imgs = [crnn.render_label(lab, seed=100 + i) for i, lab in enumerate(labels)]
     imgs += [crnn.render_label("5×5=25", seed=i) for i in range(11)]
