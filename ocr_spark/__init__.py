@@ -23,3 +23,10 @@ per-row Python UDFs, no custom Catalyst rules.
 """
 
 __version__ = "0.1.0"
+
+from ocr_spark import zipcache as _zipcache
+
+# every Python worker imports this package when it unpickles an engine
+# UDF: from then on its per-task importlib.invalidate_caches() stops
+# re-reading pyspark.zip (see ocr_spark/zipcache.py)
+_zipcache.install()

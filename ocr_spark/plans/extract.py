@@ -5,12 +5,12 @@ local[N]):
 
     corpus scan (doc_id, spans)
       ├── light docs (media spans <= HEAVY_MEDIA_SPANS)
-      │     [salted repartition on pmod(xxhash64(doc_id), buckets)
+      │     [salted repartition: hash(doc_id) mod buckets
       │      — only when needed, see below]
       │     -> mapInArrow(extract_doc_batch_arrow)     [no shuffle after]
       └── heavy docs (the ~1% media-heavy skew tail)
             explode(spans)     -> per-SPAN rows         [splits hot docs]
-            repartition on xxhash64(doc_id, offset)     [uniform units]
+            repartition on hash(doc_id, offset)         [uniform units]
             -> mapInPandas(extract_span_batch)
             -> window row_number() over (doc_id ORDER BY offset, seq)
     union
@@ -358,7 +358,10 @@ def extract(
     # 4 waves 17.9 s, 8 waves 16.2 s (tools/ab_waves.py, 3 interleaved
     # cold-JVM reps, BENCH/NOTES_r4.md §11). The same width serves the
     # heavy span-exploded path, whose per-span rows are finer-grained
-    # still.
+    # still. Both paths hash-partition on the key columns themselves
+    # (one murmur3 hash mod buckets): a pre-bucketed key such as
+    # pmod(xxhash64(doc_id), buckets) is hashed again by the
+    # partitioner, which maps the 32 bucket ids onto ~20 partitions.
     buckets = buckets or parallelism * 8
 
     # model weights: broadcast ONCE per job; each python worker fetches
@@ -460,21 +463,16 @@ def extract(
         else:
             salt = False
 
-    if heavy_threshold is None:
-        light = docs.drop("_n_media")
-        if salt:
-            light = light.repartition(
-                buckets, F.pmod(F.xxhash64("doc_id"), F.lit(buckets))
-            )
-        return light.mapInArrow(_doc_kernel, schema=OUT_SCHEMA)
-
-    light = docs.where(F.col("_n_media") <= heavy_threshold).drop("_n_media")
+    light = docs if heavy_threshold is None else docs.where(F.col("_n_media") <= heavy_threshold)
+    light = light.drop("_n_media")
     if salt:
-        light = light.repartition(buckets, F.pmod(F.xxhash64("doc_id"), F.lit(buckets)))
+        light = light.repartition(buckets, "doc_id")
     # mapInArrow: the spans list<struct> flattens via Arrow offsets in
     # the kernel, skipping the per-span Python-dict materialization
     # that Arrow->pandas conversion would do
     light = light.mapInArrow(_doc_kernel, schema=OUT_SCHEMA)
+    if heavy_threshold is None:
+        return light
 
     heavy_spans = (
         docs.where(F.col("_n_media") > heavy_threshold)
@@ -486,7 +484,7 @@ def extract(
             F.col("s.media_ref").alias("media_ref"),
             F.col("s.offset").alias("offset"),
         )
-        .repartition(buckets, F.pmod(F.xxhash64("doc_id", "offset"), F.lit(buckets)))
+        .repartition(buckets, "doc_id", "offset")
         .mapInPandas(_span_kernel, schema=_SPAN_OUT_SCHEMA)
     )
     w = Window.partitionBy("doc_id").orderBy("offset", "seq")

@@ -140,3 +140,12 @@ def test_sample_stats_share_the_probe_pass(spark, corpora):
     # same salt decision; same heavy threshold decision modulo the
     # sample-mode branch-drop rule (exact stats may drop the branch)
     assert ("Exchange" in a) == ("Exchange" in b)
+
+
+def test_salted_light_path_fills_every_bucket(spark):
+    """The salt spreads documents over all of its buckets: hashing
+    pmod(xxhash64(doc_id), buckets) a second time left 12 of 32 empty."""
+    buckets = 32
+    out = extract(corpus_df(spark, 1000), buckets=buckets, salt=True, media_stats=(2.5, 8.0))
+    parts = out.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    assert sorted(r["p"] for r in parts) == list(range(buckets))
