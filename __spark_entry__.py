@@ -123,9 +123,9 @@ def _q_extract_text_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id"),
         F.array(span(0, s1), span(10, s2), span(20, s3)).alias("spans"),
     )
-    # exact zero-media stats: heavy branch provably empty -> dropped;
-    # salt=False keeps plan construction lazy (no pre-plan job)
-    out = extract(corpus, media_stats=(0.0, 0), salt=False)
+    # text-only corpus: max_media=0 drops the heavy branch and, with no
+    # OCR work to spread, the light-path salt -> one shuffle-free scan
+    out = extract(corpus, max_media=0)
     return out.select("doc_id", F.col("order").alias("ord"), "text")
 
 

@@ -38,11 +38,8 @@ BEST_PAIR_COL_IOU = 0.3
 # the merge retry loop pipline.py:713-723).
 BEAM_K = 10
 
-# Skew handling: FLOOR for the span-exploded ("heavy") path's split
-# point. The default plan (extract(heavy_threshold='auto')) derives
-# the actual threshold from a scale-invariant outlier rule —
-# max(this floor, HEAVY_SKEW_RATIO * mean media spans per doc) — and
-# drops the heavy branch entirely when no document can qualify.
+# Skew handling: a document whose media-span count is above this goes
+# to the span-exploded ("heavy") path of extract(). Corpus documents
+# carry at most 8 media spans or 50-200 (sources/corpus.py), so any
+# split point from 8 to 49 routes them alike.
 HEAVY_MEDIA_SPANS = 16
-HEAVY_SKEW_RATIO = 8       # a doc is "heavy" at 8x the mean media cost
-HEAVY_SAMPLE_DOCS = 4096   # docs read by the sampled-stats estimate

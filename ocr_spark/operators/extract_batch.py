@@ -14,12 +14,18 @@ chain batched across the whole batch (``extract_media_spans_batch``):
   ``seq`` column (position within the span); the global ``order`` is
   restored by a window on (doc_id ORDER BY offset, seq) in the Spark
   plan.
+
+Both validate their spans with ``check_spans`` before any work: an
+unknown or null ``kind`` and a media span without a ``media_ref`` raise
+``ValueError`` naming the document; a null text span is dropped like
+one that cleans to ''.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 
 from ocr_spark.functions.text_clean import clean_text_series, has_cjk_series
@@ -37,6 +43,31 @@ def clean_text_spans(raw: pd.Series) -> tuple[pd.Series, pd.Series]:
     return cleaned, keep
 
 
+def check_spans(kind, text: pd.Series, media_ref, doc_ids, row_idx):
+    """Validate one batch of spans, vectorized. ``kind``/``text``/
+    ``media_ref`` hold one entry per span, ``doc_ids[row_idx[i]]`` is
+    span i's document. Raises ``ValueError`` naming the first document
+    with a span whose kind is not 'text'/'media' (null included) or a
+    media span whose ``media_ref`` is null. Returns ``(is_text, text)``
+    with null texts replaced by ''."""
+    kind = np.asarray(kind, dtype=object)
+    is_text = kind == "text"
+    is_media = kind == "media"
+    null_ref = pd.isna(np.asarray(media_ref, dtype=object))
+    bad = ~(is_text | is_media) | (is_media & null_ref)
+    if bad.any():
+        i = int(np.flatnonzero(bad)[0])
+        what = "a null media_ref" if is_media[i] else f"kind {kind[i]!r}"
+        raise ValueError(
+            f"doc_id {doc_ids[row_idx[i]]!r}: span with {what} "
+            "(kind must be 'text' or 'media'; media spans need a media_ref)"
+        )
+    null_text = is_text & text.isna().to_numpy()
+    if null_text.any():
+        text = text.mask(null_text, "")
+    return is_text, text
+
+
 def extract_span_batch(
     batches: Iterator[pd.DataFrame], weights: dict | None = None
 ) -> Iterator[pd.DataFrame]:
@@ -46,11 +77,14 @@ def extract_span_batch(
         if len(pdf) == 0:
             continue
         out_rows = []
-        is_text = pdf["kind"] == "text"
+        is_text, text = check_spans(
+            pdf["kind"], pdf["text"], pdf["media_ref"],
+            pdf["doc_id"].to_numpy(), np.arange(len(pdf)),
+        )
         cleaned = pd.Series("", index=pdf.index, dtype=object)
         keep = pd.Series(False, index=pdf.index)
         if is_text.any():
-            c, k = clean_text_spans(pdf.loc[is_text, "text"])
+            c, k = clean_text_spans(text[is_text])
             cleaned.loc[is_text] = c
             keep.loc[is_text] = k
         # recognition batched across every media span of the batch
@@ -68,8 +102,8 @@ def extract_span_batch(
                     out_rows.append((doc_id, offset, 0, "text", cleaned.at[idx], ""))
             else:
                 ref = pdf.at[idx, "media_ref"]
-                for seq, text in enumerate(next(media_texts)):
-                    out_rows.append((doc_id, offset, seq, "media", text, ref))
+                for seq, t in enumerate(next(media_texts)):
+                    out_rows.append((doc_id, offset, seq, "media", t, ref))
         yield pd.DataFrame(out_rows, columns=SPAN_OUT_COLUMNS)
 
 
@@ -111,6 +145,7 @@ def extract_doc_batch_arrow(batches, weights: dict | None = None):
         text = pd.Series(flat.field("text").to_numpy(zero_copy_only=False))
         media_ref = flat.field("media_ref").to_numpy(zero_copy_only=False)
         offset = flat.field("offset").to_numpy(zero_copy_only=False)
+        is_text, text = check_spans(kind, text, media_ref, doc_ids, row_idx)
 
         # canonical order (row, offset) — spans arrive offset-ordered,
         # so the lexsort is skipped unless the contract is violated
@@ -121,16 +156,15 @@ def extract_doc_batch_arrow(batches, weights: dict | None = None):
             )
         ):
             order_ix = np.lexsort((offset, row_idx))
-            row_idx, kind, media_ref = (
+            row_idx, is_text, media_ref = (
                 row_idx[order_ix],
-                kind[order_ix],
+                is_text[order_ix],
                 media_ref[order_ix],
             )
             text = text.iloc[order_ix].reset_index(drop=True)
 
-        is_text = kind == "text"
-        cleaned = np.empty(len(kind), dtype=object)
-        keep = np.zeros(len(kind), dtype=bool)
+        cleaned = np.empty(len(is_text), dtype=object)
+        keep = np.zeros(len(is_text), dtype=bool)
         if is_text.any():
             c, k = clean_text_spans(text[is_text].reset_index(drop=True))
             cleaned[is_text] = c.to_numpy(dtype=object)
@@ -138,7 +172,7 @@ def extract_doc_batch_arrow(batches, weights: dict | None = None):
 
         # media spans: recognition batched across the WHOLE Arrow batch
         # (width-bucketed BLAS matmuls over every crop of every page)
-        media_counts = np.zeros(len(kind), dtype=np.int64)
+        media_counts = np.zeros(len(is_text), dtype=np.int64)
         media_idx = np.flatnonzero(~is_text)
         media_texts = extract_media_spans_batch(
             [media_ref[i] for i in media_idx], weights

@@ -112,6 +112,37 @@ def test_arrow_kernel_sorts_unsorted_offsets(docs):
     pd.testing.assert_frame_equal(got, _doc_kernel((ids, spans)))
 
 
+_GOOD_TEXT = {"kind": "text", "text": "1+1=2", "media_ref": "", "offset": 0}
+_GOOD_MEDIA = {"kind": "media", "text": "", "media_ref": "m-000000000001", "offset": 1}
+_MALFORMED = {
+    "kind_image": {**_GOOD_MEDIA, "kind": "image"},
+    "kind_null": {**_GOOD_TEXT, "kind": None},
+    "media_ref_null": {**_GOOD_MEDIA, "media_ref": None},
+}
+
+
+@pytest.mark.parametrize("kernel", [_doc_kernel, _span_kernel], ids=["arrow", "span"])
+@pytest.mark.parametrize("case", sorted(_MALFORMED))
+def test_malformed_span_raises_naming_doc(kernel, case):
+    """An unknown or null kind and a media span without a ref are
+    rejected, naming the document — not OCR'd as media, fabricated from
+    an empty ref or emitted with a null ref."""
+    docs = (["ok-doc", "bad-doc"], [[_GOOD_TEXT], [_GOOD_TEXT, _MALFORMED[case]]])
+    with pytest.raises(ValueError, match="bad-doc"):
+        kernel(docs)
+
+
+@pytest.mark.parametrize("kernel", [_doc_kernel, _span_kernel], ids=["arrow", "span"])
+def test_null_text_span_is_dropped(kernel):
+    """A null text cleans like '': the span is dropped, its neighbours
+    keep their rows and a contiguous order."""
+    spans = [{**_GOOD_TEXT, "text": None}, _GOOD_MEDIA, {**_GOOD_TEXT, "offset": 2}]
+    got = kernel((["d"], [spans]))
+    want = kernel((["d"], [spans[1:]]))
+    assert list(got["kind"]) == ["media"] * (len(got) - 1) + ["text"]
+    pd.testing.assert_frame_equal(got, want)
+
+
 def test_broadcast_weights_flow_into_recognition():
     """The weights dict is a real input: the default (identity
     projection) reproduces the frozen outputs, and a permuted

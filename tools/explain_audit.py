@@ -42,8 +42,8 @@ AUDITS: list[tuple[str, list[str], list[str]]] = [
     ("mutual_nearest_pair", ["Window"], ["CartesianProduct"]),
     ("ocr_extract_spans", ["MapInArrow"], ["CartesianProduct", "BatchEvalPython"]),
     # text-path content gate: one scan -> span construction (codegen) ->
-    # the real extraction kernel; heavy branch provably dropped and
-    # salt=False, so the whole plan is shuffle-free
+    # the real extraction kernel; max_media=0 drops the heavy branch and
+    # the salt, so the whole plan is shuffle-free
     ("ocr_extract_text_spans", ["MapInArrow"],
      ["Exchange", "CartesianProduct", "BatchEvalPython"]),
     # the (band, key) self-join may legitimately be a broadcast at small
@@ -290,12 +290,12 @@ def main() -> None:
         )
         print(name, "OK" if not any("FAIL" in s for s in status) else "FAIL", flush=True)
 
-    # single-scan contract: with exact media stats (Iceberg-manifest
-    # mode) and a benign batch, the extraction plan contains exactly
-    # ONE source scan — no stats pre-pass job, no second branch scan
+    # single-scan contract: with a known media bound under the heavy
+    # threshold (e.g. from table metadata), the extraction plan
+    # contains exactly ONE source scan — no second branch scan
     from ocr_spark.plans.extract import corpus_df, extract
 
-    benign = extract(corpus_df(spark, 64), media_stats=(2.5, 8.0))
+    benign = extract(corpus_df(spark, 64), max_media=8)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         benign.explain("formatted")
@@ -307,9 +307,9 @@ def main() -> None:
     n_scans = len(re.findall(r"Range \(\d+\)\s*$", plan, flags=re.M))
     status = [f"  REQUIRE {'OK ' if n_scans == 1 else 'FAIL'}: exactly one source scan (found {n_scans})"]
     if n_scans != 1:
-        failures.append(f"extract_single_scan: {n_scans} scans in benign stats-fed plan")
+        failures.append(f"extract_single_scan: {n_scans} scans in max_media-bounded plan")
     sections.append(
-        "## extract (exact stats, benign batch) — single-scan contract\n\n"
+        "## extract (max_media=8, benign batch) — single-scan contract\n\n"
         + "\n".join(status) + "\n\n```\n" + plan.strip() + "\n```\n"
     )
     print("extract_single_scan", "OK" if n_scans == 1 else "FAIL", flush=True)

@@ -5,11 +5,8 @@ scaling job inside one cold session at local[32].
 Phases timed separately:
   weights   — default_weights() construction on the driver (closed-form
               classifier fit + conv banks) + sc.broadcast serialization
-  stats     — the bounded pre-plan job: since r5 ONE combined
-              _file_head_stats job (sampled stats + salt probe,
-              executor-reduced); the old limit(HEAVY_SAMPLE_DOCS)
-              sample job is timed alongside for comparison
-  plan      — DataFrame construction + .explain (Catalyst analysis)
+  plan      — DataFrame construction + .explain (Catalyst analysis;
+              extract() reads no statistics, so no pre-plan job)
   execute   — the actual extract + parquet write action
   commit    — approximated as execute_and_write - execute_noop_sink
               (same plan run into a no-op sink)
@@ -78,28 +75,8 @@ def main() -> None:
     _ = bc.value
     t["weights_broadcast"] = time.time() - t0
 
-    from pyspark.sql import functions as F
-
-    from ocr_spark.plans.extract import HEAVY_SAMPLE_DOCS, media_span_count
-
     t0 = time.time()
-    row = (
-        docs.withColumn("_n_media", media_span_count())
-        .select("_n_media")
-        .limit(HEAVY_SAMPLE_DOCS)
-        .agg(F.avg("_n_media").alias("mean"), F.max("_n_media").alias("mx"))
-        .first()
-    )
-    t["stats_sample_job_legacy"] = time.time() - t0
-
-    from ocr_spark.plans.extract import _file_head_stats
-
-    t0 = time.time()
-    _ = _file_head_stats(spark, docs.inputFiles())
-    t["head_stats_job"] = time.time() - t0
-
-    t0 = time.time()
-    plan_df = extract(docs, heavy_threshold="auto", salt="auto", media_stats="sample")
+    plan_df = extract(docs)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         plan_df.explain("formatted")

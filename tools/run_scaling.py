@@ -4,8 +4,8 @@ Implements the measurement protocol from BASELINE.md: the identical
 extraction job (read staged corpus -> extract -> write parquet) at
 local[8] (N) and local[32] (4N), cold JVM per run, 1 warm-up + 3 timed
 runs each, median throughput, scaling efficiency = (thr_4N/thr_N)/4.
-Also runs the skew ablation (heavy-path splitting disabled) at both
-parallelism levels to evidence explicit skew handling.
+The skew & layout ablation section renders the recorded arms in
+BENCH/scaling.json through BENCH/skew_ablations.md.in.
 
 Usage: python tools/run_scaling.py [--docs 5000] [--timed 3]
 Writes BENCH/BASELINE.md and BENCH/scaling.json.
@@ -23,6 +23,8 @@ import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from ocr_spark.config import HEAVY_MEDIA_SPANS  # noqa: E402
 
 CHILD = """
 import json, os, sys, time
@@ -44,19 +46,9 @@ docs = spark.read.parquet({corpus!r})
 # sandbox job mis-attributes ~5 s of one-time interpreter spin-up
 warm = docs.limit(128)
 extract(warm, heavy_threshold=0).write.mode('overwrite').parquet({out!r} + '_warm')
-extract(warm, heavy_threshold={heavy!r}, salt={salt!r}).write.mode('overwrite').parquet({out!r} + '_warm')
-if {assert_mega_heavy!r}:
-    # replay the auto rule on exact stats and prove the 4k-span mega doc
-    # lands on the heavy (split) branch — otherwise this config would
-    # quietly benchmark the unsplit plan under the 'auto' label
-    from pyspark.sql import functions as F
-    from ocr_spark.plans.extract import media_span_count, HEAVY_MEDIA_SPANS, HEAVY_SKEW_RATIO
-    stats = docs.select(media_span_count().alias('m')).agg(
-        F.avg('m').alias('mean'), F.max('m').alias('mx')).first()
-    thr = max(HEAVY_MEDIA_SPANS, int(HEAVY_SKEW_RATIO * stats['mean']))
-    assert stats['mx'] > thr, (stats, thr)
+extract(warm, heavy_threshold={heavy!r}).write.mode('overwrite').parquet({out!r} + '_warm')
 t0 = time.time()
-extract(docs, heavy_threshold={heavy!r}, salt={salt!r}, media_stats={media_stats!r}, buckets={buckets!r}).write.mode('overwrite').parquet({out!r})
+extract(docs, heavy_threshold={heavy!r}).write.mode('overwrite').parquet({out!r})
 
 wall = time.time() - t0
 n = spark.read.parquet({out!r}).select('doc_id').distinct().count()
@@ -69,12 +61,7 @@ def run_once(
     corpus: str,
     out: str,
     cpus: int,
-    heavy="auto",
-    salt="auto",
-    media_stats="sample",
-    assert_mega_heavy=False,
     master: str | None = None,
-    buckets: int | None = None,
 ) -> dict:
     code = CHILD.format(
         repo=REPO,
@@ -82,11 +69,7 @@ def run_once(
         shuffle=max(2 * cpus, 8),
         corpus=corpus,
         out=out,
-        heavy=heavy,
-        salt=salt,
-        media_stats=media_stats,
-        assert_mega_heavy=assert_mega_heavy,
-        buckets=buckets,
+        heavy=HEAVY_MEDIA_SPANS,
     )
     p = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, check=True
@@ -247,6 +230,7 @@ def main() -> None:
             # capability supremum only ever rises as windows improve)
             prior_ceil=prior.get("kernel_ceiling_agg_crops_per_s"),
             skip_probe=args.render,
+            nominal_cores=prior.get("nominal_cores"),
         )
         return
 
@@ -257,41 +241,9 @@ def main() -> None:
     corpus = os.path.join(work, "corpus")
     out = os.path.join(work, "out")
 
-    corpus_sorted = os.path.join(work, "corpus_sorted")
     spark = build_session(master="local[8]", app_name="scaling_stage")
     spark.sparkContext.setLogLevel("ERROR")
     corpus_df(spark, args.docs, partitions=64).write.parquet(corpus)
-    # adversarial layout: globally sorted by media weight, so the
-    # heavy tail is CLUSTERED into the first partition(s) — models an
-    # ingest whose arrival order correlates with media density
-    from pyspark.sql import functions as F
-
-    from ocr_spark.plans.extract import media_span_count
-
-    (
-        spark.read.parquet(corpus)
-        .withColumn("_m", media_span_count())
-        .orderBy(F.desc("_m"))
-        .drop("_m")
-        .write.parquet(corpus_sorted)
-    )
-    # mega-doc corpus: the base corpus plus ONE document of 4k media
-    # spans (~2 core-minutes of REAL kernel work since round 2) — the
-    # indivisible-row straggler that per-row cost skew produces at 100 TB
-    corpus_mega = os.path.join(work, "corpus_mega")
-    from ocr_spark.plans.extract import DOCS_SCHEMA
-
-    mega_spans = [  # ~2 core-minutes of REAL kernel work in one row
-        
-        {"kind": "media", "text": "", "media_ref": f"m-mega{i}", "offset": i}
-        for i in range(4000)
-    ]
-    spark.createDataFrame([("doc-mega", mega_spans)], DOCS_SCHEMA).write.parquet(
-        corpus_mega
-    )
-    corpus_df(spark, min(args.docs, 4000), partitions=64).write.mode("append").parquet(
-        corpus_mega
-    )
     spark.stop()
 
     eff_cores = effective_cores()
@@ -299,48 +251,29 @@ def main() -> None:
 
     nl = args.n_large
     results: dict[str, dict] = {}
-    # (label, cpus, heavy_threshold, salt, corpus, media_stats): the
-    # megadoc-auto config pins media_stats='exact' so the auto rule sees
-    # the true max (a prefix sample observing the mega doc is a corpus-
-    # size accident) — and the child asserts the mega doc actually
-    # crosses the threshold, so the 'auto(splits mega)' label is honest.
-    # (label, cpus, heavy, salt, corpus, media_stats, master): the two
-    # cluster-* configs are the north rule's literal form — N vs 4N
-    # EXECUTORS (local-cluster spawns real separate executor JVMs, each
-    # with its own heap and python workers), 4 cores each, so 2 -> 8
-    # executors is a genuine 4x cluster-size step with per-executor
-    # process isolation rather than one shared JVM.
+    # (label, cpus, master): the cluster-* configs are the north rule's
+    # literal form — N vs 4N EXECUTORS (local-cluster spawns real
+    # separate executor JVMs, each with its own heap and python
+    # workers), 4 cores each, so 2 -> 8 executors is a genuine 4x
+    # cluster-size step with per-executor process isolation rather than
+    # one shared JVM. The skew/layout ablation arms ran under plan
+    # knobs extract() no longer has; _finish renders them from the
+    # recorded BENCH/scaling.json.
     configs = [
         # local[1] anchors the narrowest N -> 4N pair (1 -> 4): its
         # 1-to-4 ratio pairs with the local[4] medians from the SAME
         # interleaved window (no cross-window mixing)
-        ("local[1]", 1, "auto", "auto", corpus, "sample", None),
-        ("local[4]", 4, "auto", "auto", corpus, "sample", None),
-        (f"local[{args.n_small}]", args.n_small, "auto", "auto", corpus, "sample", None),
-        ("local[16]", 16, "auto", "auto", corpus, "sample", None),
-        (f"local[{nl}]", nl, "auto", "auto", corpus, "sample", None),
-        ("cluster-2x4", 8, "auto", "auto", corpus, "sample",
-         "local-cluster[2,4,4096]"),
-        ("cluster-8x4", 32, "auto", "auto", corpus, "sample",
-         "local-cluster[8,4,4096]"),
-        ("cluster-1x4", 4, "auto", "auto", corpus, "sample",
-         "local-cluster[1,4,4096]"),
-        ("cluster-4x4", 16, "auto", "auto", corpus, "sample",
-         "local-cluster[4,4,4096]"),
-        ("cluster-2x2", 4, "auto", "auto", corpus, "sample",
-         "local-cluster[2,2,4096]"),
-        ("cluster-8x2", 16, "auto", "auto", corpus, "sample",
-         "local-cluster[8,2,4096]"),
-        # at nl=32 the 64-partition corpus is 2 scan waves/core — inside
-        # the probe band. On this hash-random layout the probe DECLINES,
-        # so default == unsalted plan + probe/stats overhead; the
-        # salt=False arm (probe skipped entirely) isolates that overhead
-        (f"local[{nl}]-nosalt", nl, "auto", False, corpus, "sample", None),
-        (f"local[{nl}]-split16", nl, 16, "auto", corpus, "sample", None),
-        (f"local[{nl}]-sorted-nosalt", nl, "auto", False, corpus_sorted, "sample", None),
-        (f"local[{nl}]-sorted-salted", nl, "auto", True, corpus_sorted, "sample", None),
-        (f"local[{nl}]-megadoc-nosplit", nl, 10**9, False, corpus_mega, "sample", None),
-        (f"local[{nl}]-megadoc-auto", nl, "auto", False, corpus_mega, "exact", None),
+        ("local[1]", 1, None),
+        ("local[4]", 4, None),
+        (f"local[{args.n_small}]", args.n_small, None),
+        ("local[16]", 16, None),
+        (f"local[{nl}]", nl, None),
+        ("cluster-2x4", 8, "local-cluster[2,4,4096]"),
+        ("cluster-8x4", 32, "local-cluster[8,4,4096]"),
+        ("cluster-1x4", 4, "local-cluster[1,4,4096]"),
+        ("cluster-4x4", 16, "local-cluster[4,4,4096]"),
+        ("cluster-2x2", 4, "local-cluster[2,2,4096]"),
+        ("cluster-8x2", 16, "local-cluster[8,2,4096]"),
     ]
     prior_results: dict[str, dict] = {}
     if args.only:
@@ -362,13 +295,8 @@ def main() -> None:
     # equally instead of landing on whichever config happened to run
     # during the noisy window (the r3 artifact's failure mode)
     for rep in range(args.timed):
-        for label, cpus, h, salt, src, mstats, mstr in configs:
-            r = run_once(
-                src, out, cpus, h, salt,
-                media_stats=mstats,
-                assert_mega_heavy=(src == corpus_mega and h == "auto"),
-                master=mstr,
-            )
+        for label, cpus, mstr in configs:
+            r = run_once(corpus, out, cpus, master=mstr)
             walls_by_label.setdefault(label, []).append(r["wall_s"])
             print(
                 f"rep {rep + 1}/{args.timed} {label}: {r['wall_s']:.1f}s "
@@ -376,7 +304,7 @@ def main() -> None:
                 flush=True,
             )
     loadavg_end = os.getloadavg()
-    for label, cpus, h, salt, src, mstats, mstr in configs:
+    for label, cpus, mstr in configs:
         walls = walls_by_label[label]
         med = statistics.median(walls)
         results[label] = {
@@ -385,10 +313,8 @@ def main() -> None:
             "walls_s": [round(w, 2) for w in walls],
             "median_wall_s": round(med, 2),
             "docs_per_sec": round(args.docs / med, 2),
-            "heavy_threshold": h,
-            "salt": salt,
-            "layout": ("sorted" if src == corpus_sorted
-                       else "mega" if src == corpus_mega else "random"),
+            "heavy_threshold": HEAVY_MEDIA_SPANS,
+            "layout": "random",
         }
         print(label, results[label], flush=True)
 
@@ -399,9 +325,18 @@ def main() -> None:
 
 def _finish(
     args, results, eff_cores, loadavg_start, loadavg_end, prior_ceil=None,
-    skip_probe=False,
+    skip_probe=False, nominal_cores=None,
 ) -> None:
     nl = args.n_large
+    # a re-render keeps the recorded host's core count, not this one's
+    nominal_cores = nominal_cores or os.cpu_count()
+    # The skew/layout ablation arms (forced salt on and off, sorted and
+    # mega-doc layouts, sampled or exact media statistics) ran under
+    # plan knobs extract() no longer has; their rows come from the
+    # recorded artifact and are kept in it.
+    with open(os.path.join(REPO, "BENCH", "scaling.json")) as f:
+        recorded = json.load(f)["results"]
+    results = {**results, **{k: v for k, v in recorded.items() if k not in results}}
     thr_n = results[f"local[{args.n_small}]"]["docs_per_sec"]
     thr_4n = results[f"local[{args.n_large}]"]["docs_per_sec"]
     ratio = args.n_large / args.n_small
@@ -468,6 +403,7 @@ def _finish(
     payload = {
         "n_docs": args.docs,
         "effective_cores": eff_cores,
+        "nominal_cores": nominal_cores,
         "results": results,
         "scaling_efficiency_N_to_4N": eff,
         "scaling_efficiency_4_to_16": eff_4_16,
@@ -684,13 +620,23 @@ only; see the per-file loadavg fields for contention context):
 |---|---|---|---|---|---|
 """ + "\n".join(host_rows) + "\n"
 
-    r_nl = results[f"local[{nl}]"]
-    r_nosalt = results[f"local[{nl}]-nosalt"]
-    r_split16 = results[f"local[{nl}]-split16"]
-    r_srt_no = results[f"local[{nl}]-sorted-nosalt"]
-    r_srt_sa = results[f"local[{nl}]-sorted-salted"]
-    r_meg_no = results[f"local[{nl}]-megadoc-nosplit"]
-    r_meg_au = results[f"local[{nl}]-megadoc-auto"]
+    # the job's plan arguments as recorded with the local[4] row
+    knobs = results["local[4]"]
+    job_call = ",\n".join(
+        f"{k}={knobs[k]!r}" for k in ("salt", "heavy_threshold") if k in knobs
+    )
+    arm = {k[len(f"local[{nl}]-"):]: v for k, v in results.items()
+           if k.startswith(f"local[{nl}]-")}
+    with open(os.path.join(REPO, "BENCH", "skew_ablations.md.in")) as f:
+        skew_md = f.read().rstrip("\n").format(
+            nl=nl,
+            default=results[f"local[{nl}]"],
+            arm=arm,
+            sorted_gain=round(arm["sorted-nosalt"]["median_wall_s"]
+                              / arm["sorted-salted"]["median_wall_s"], 2),
+            mega_gain=round(arm["megadoc-nosplit"]["median_wall_s"]
+                            / arm["megadoc-auto"]["median_wall_s"], 2),
+        )
     md = f"""# BENCH/BASELINE — scaling & skew evidence
 
 North-rule criterion: documents/sec scaling efficiency >= 0.8 between
@@ -704,7 +650,7 @@ local[4] vs local[16] and local[{args.n_small}] vs local[{args.n_large}].
 co-tenant box bound ANY single-box scaling number before the engine
 runs a single Spark task:
 - a saturation burn test gets {eff_cores} busy cores out of
-  {os.cpu_count()} nominal;
+  {nominal_cores} nominal;
 - more importantly, PER-CORE throughput of the actual recognition
   kernel drops as cores activate (turbo droop + shared L3/DRAM):
   {ceil[4]} / {ceil[8]} / {ceil[16]} / {ceil[32]} aggregate crops/s at
@@ -728,8 +674,7 @@ capability measurement — a single-shot probe once read a 4x-too-low
 "ceiling" that put the engine impossibly above it.
 Box loadavg (1/5/15 min): {tuple(round(x, 2) for x in loadavg_start)} at start,
 {tuple(round(x, 2) for x in loadavg_end)} at end of the timed window.
-Job = read parquet corpus -> extract(salt='auto',
-heavy_threshold='auto') -> write parquet.
+Job = read parquet corpus -> extract({job_call}) -> write parquet.
 
 | config | median wall (s) | docs/sec |
 |---|---|---|
@@ -777,59 +722,7 @@ kernel hardware droop (the bare-kernel ceiling column — near-flat
 on an idle box).
 
 {amort_md}{hostwin_md}{submit_md}
-## Skew & layout ablations (explicit skew handling evidence)
-
-All at local[{nl}] on the same corpus; "sorted" = adversarial layout
-(docs globally sorted by media weight, heavy tail clustered into the
-first partitions — an ingest order correlated with media density).
-
-| variant | layout | salt shuffle | heavy split | median wall (s) |
-|---|---|---|---|---|
-| default | random | auto(2 waves; probe declines) | auto(none qualify) | {r_nl['median_wall_s']} |
-| forced no-salt | random | off (no probe) | auto | {r_nosalt['median_wall_s']} |
-| forced split@16 | random | auto(declines) | fixed 16 | {r_split16['median_wall_s']} |
-| adversarial, no salt | sorted | off | auto | {r_srt_no['median_wall_s']} |
-| adversarial, salted | sorted | on | auto | {r_srt_sa['median_wall_s']} |
-| +4k-span mega-doc, no split | mega | off | off | {r_meg_no['median_wall_s']} |
-| +4k-span mega-doc, auto | mega | off | auto(splits mega only) | {r_meg_au['median_wall_s']} |
-
-Reading:
-- **Salting policy** (extract(salt='auto')): three regimes
-  (plans/extract.py; probe decisions are plan-asserted in
-  tests/test_salt_probe.py). (1) scan partitions < cores: salt
-  unconditionally — cores would idle regardless of layout.
-  (2) 1 to <4 task waves per core — THIS corpus at local[{nl}]
-  (64 scan partitions = 2 waves) — salt only when the bounded
-  per-file `layout_skew_probe` (max/median prefix media density,
-  threshold 6; the sandbox stand-in for Iceberg manifests'
-  per-file aggregates) reports clustered cost. On this
-  hash-random layout it reads ~2.4 and DECLINES: the default row
-  runs unsalted straight off the scan partitions, and its gap to
-  the probe-free forced-no-salt arm
-  ({r_nl['median_wall_s']} vs {r_nosalt['median_wall_s']} s)
-  is the probe + stats-sample cost, not a shuffle. On the
-  adversarial sorted layout the probe reads 20+ and fires; the
-  ablation forces both positions to measure what that decision is
-  worth — salting (to 8 task waves/core) recovers
-  {round(r_srt_no['median_wall_s'] / r_srt_sa['median_wall_s'], 2)}x
-  (sorted-salted vs sorted-nosalt) because without it the
-  clustered heavy partitions become stragglers.
-  (3) >=4 waves: never salt — the scheduler absorbs per-partition
-  variance and forcing the salt on measures ~9% worse (local[16]
-  interleaved cold-JVM A/B, 25.1 s unsalted vs 27.2 s forced —
-  BENCH/NOTES_r4.md §12). The production rule: bucket the Iceberg
-  table by doc_id (random layout AND enough input splits for
-  free); the probe-gated salt guards un-bucketed, append-ordered,
-  or coarsely-partitioned inputs.
-- **Cost-based splitting** (extract(heavy_threshold='auto')): a
-  document splits into per-span work units when its media count
-  exceeds HEAVY_SKEW_RATIO (8x) times the corpus mean (stats from
-  table manifests / a bounded sample — never a full pre-scan). The
-  mega-doc rows are the regime where splitting IS the win: one
-  4k-span document of real recognition compute pins a single task without the
-  split — wall {round(r_meg_no['median_wall_s'] / r_meg_au['median_wall_s'], 2)}x
-  the auto-split plan, and the gap equals the whole mega-doc cost no
-  matter how many executors exist. The auto rule fires exactly there.
+{skew_md}
 
 Raw numbers: BENCH/scaling.json. Per-bucket lineage/throughput metrics
 for the resumable job variant: `SnapshotStore.read_metrics`
