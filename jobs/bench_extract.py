@@ -24,7 +24,7 @@ from __future__ import annotations
 import os
 
 # Driver-side BLAS pinning must happen BEFORE any ocr_spark import:
-# importing ocr_spark.plans.extract loads numpy/OpenBLAS (via pandas),
+# importing ocr_spark.plans.extract loads numpy/OpenBLAS,
 # and OpenBLAS reads its thread env once at load, so a later setdefault
 # would be a no-op for the driver process.
 for _var in (

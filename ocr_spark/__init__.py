@@ -17,7 +17,7 @@ CJK boilerplate drop). Each document emits its extracted span sequence
 (kind, text, media_ref, order).
 
 Architecture: one relational shell visible to Catalyst (scan ->
-salted/skew-split repartition -> mapInPandas -> window/write) plus a
+salted/skew-split repartition -> mapInArrow -> window/write) plus a
 small set of numpy kernels behind vectorized Arrow UDFs. No RDDs, no
 per-row Python UDFs, no custom Catalyst rules.
 """

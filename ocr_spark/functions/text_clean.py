@@ -15,15 +15,13 @@ heuristics:
 Every reference replacement is 1-char -> (1-char | ''), and no
 replacement's output is another replacement's input, so the sequential
 replace chain is equivalent to one simultaneous character translation.
-We exploit that for vectorization (``str.translate`` on pandas,
-``F.translate`` on Spark columns).
+We exploit that twice: one ``str.translate`` per span in the batch
+path (``clean_text_series``), one ``F.translate`` on Spark columns.
 """
 
 from __future__ import annotations
 
 import re
-
-import pandas as pd
 
 from ocr_spark.config import CJK_HI, CJK_LO
 
@@ -53,13 +51,8 @@ _CJK_RE = re.compile(f"[{chr(CJK_LO)}-{chr(CJK_HI)}]")
 
 
 def normalize_text(s: str) -> str:
-    """Normalize one string (scalar path, used in tests/tools)."""
+    """Normalize one string."""
     return s.translate(_TRANSLATE_TABLE)
-
-
-def normalize_series(s: pd.Series) -> pd.Series:
-    """Vectorized normalization over a pandas Series of strings."""
-    return s.str.translate(_TRANSLATE_TABLE)
 
 
 def collapse_double_eq(s: str) -> str:
@@ -70,25 +63,11 @@ def collapse_double_eq(s: str) -> str:
     return s
 
 
-def collapse_double_eq_series(s: pd.Series) -> pd.Series:
-    n = s.str.count("=")
-    multi = n > 1
-    if not multi.any():
-        return s
-    out = s.copy()
-    sub = s[multi].str.split("=")
-    out[multi] = sub.str[0] + "=" + sub.str[-1]
-    return out
-
-
 def has_cjk(s: str) -> bool:
     return _CJK_RE.search(s) is not None
 
 
-def has_cjk_series(s: pd.Series) -> pd.Series:
-    return s.str.contains(_CJK_RE)
-
-
-def clean_text_series(s: pd.Series) -> pd.Series:
-    """Full text-span cleaning chain: normalize + double-'=' repair."""
-    return collapse_double_eq_series(normalize_series(s))
+def clean_text_series(texts) -> list[str]:
+    """Full text-span cleaning chain over a batch of strings:
+    normalize + double-'=' repair."""
+    return [collapse_double_eq(normalize_text(t)) for t in texts]

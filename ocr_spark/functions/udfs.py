@@ -31,7 +31,11 @@ from ocr_spark.functions.text_clean import clean_text_series
 
 @pandas_udf(StringType())
 def clean_text_udf(raw: pd.Series) -> pd.Series:
-    return clean_text_series(raw)
+    # a null stays null, as in the Catalyst chain (textstats.clean_expr)
+    out = pd.Series(None, index=raw.index, dtype=object)
+    valid = raw.notna()
+    out[valid] = clean_text_series(raw[valid])
+    return out
 
 
 @pandas_udf(StringType())

@@ -9,11 +9,15 @@ local[N]):
       │      — fewer than 4 input files per core only, see below]
       │     -> mapInArrow(extract_doc_batch_arrow)     [no shuffle after]
       └── heavy docs (the ~1% media-heavy skew tail)
-            explode(spans)     -> per-SPAN rows         [splits hot docs]
+            explode(spans)     -> one-span documents    [splits hot docs]
             repartition on hash(doc_id, offset)         [uniform units]
-            -> mapInPandas(extract_span_batch)
-            -> window row_number() over (doc_id ORDER BY offset, seq)
+            -> mapInArrow(extract_doc_batch_arrow)
+            -> window row_number() over (doc_id ORDER BY offset, order)
     union
+
+Both arms run the same kernel. It emits each row's source-span
+``offset`` as a sixth column: the heavy arm's window orders by it, the
+light arm projects it away.
 
 Why: extraction is per-document, so the only skew risk is a single
 document whose media cost dwarfs the batch median (FIXTURES.md: 50-200
@@ -56,10 +60,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ocr_spark.config import HEAVY_MEDIA_SPANS
-from ocr_spark.operators.extract_batch import (
-    extract_doc_batch_arrow,
-    extract_span_batch,
-)
+from ocr_spark.operators.extract_batch import extract_doc_batch_arrow
+from ocr_spark.operators.textstats import CJK_PATTERN, clean_expr
 
 SPAN_TYPE = T.StructType(
     [
@@ -87,15 +89,9 @@ OUT_SCHEMA = T.StructType(
     ]
 )
 
-_SPAN_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-        T.StructField("seq", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-    ]
+# what extract_doc_batch_arrow emits: OUT_SCHEMA + the source span's offset
+_KERNEL_SCHEMA = T.StructType(
+    OUT_SCHEMA.fields + [T.StructField("offset", T.IntegerType())]
 )
 
 
@@ -174,9 +170,6 @@ def extract(
     def _doc_kernel(batches):
         return extract_doc_batch_arrow(batches, weights=bc.value)
 
-    def _span_kernel(batches):
-        return extract_span_batch(batches, weights=bc.value)
-
     docs = docs.withColumn("_n_media", media_span_count())
     light = docs.where(F.col("_n_media") <= heavy_threshold) if split else docs
     light = light.drop("_n_media")
@@ -185,24 +178,18 @@ def extract(
     # mapInArrow: the spans list<struct> flattens via Arrow offsets in
     # the kernel, skipping the per-span Python-dict materialization
     # that Arrow->pandas conversion would do
-    light = light.mapInArrow(_doc_kernel, schema=OUT_SCHEMA)
+    light = light.mapInArrow(_doc_kernel, schema=_KERNEL_SCHEMA).drop("offset")
     if not split:
         return light
 
     heavy_spans = (
         docs.where(F.col("_n_media") > heavy_threshold)
         .select("doc_id", F.explode("spans").alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.kind").alias("kind"),
-            F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"),
-            F.col("s.offset").alias("offset"),
-        )
-        .repartition(buckets, "doc_id", "offset")
-        .mapInPandas(_span_kernel, schema=_SPAN_OUT_SCHEMA)
+        .repartition(buckets, "doc_id", "s.offset")
+        .select("doc_id", F.array("s").alias("spans"))
+        .mapInArrow(_doc_kernel, schema=_KERNEL_SCHEMA)
     )
-    w = Window.partitionBy("doc_id").orderBy("offset", "seq")
+    w = Window.partitionBy("doc_id").orderBy("offset", "order")
     heavy = heavy_spans.select(
         "doc_id",
         (F.row_number().over(w) - F.lit(1)).cast("int").alias("order"),
@@ -237,23 +224,11 @@ def extract_invariants(spans: DataFrame, docs: DataFrame) -> DataFrame:
     oracle — a silently dropped document is a hard mismatch. One
     shuffle on doc_id for the output aggregate plus one map-side
     aggregate over the input; both all-column-pruned scans."""
-    from ocr_spark.config import CJK_HI, CJK_LO  # noqa: PLC0415
-    from ocr_spark.functions.text_clean import (  # noqa: PLC0415
-        TRANSLATE_MATCHING,
-        TRANSLATE_REPLACE,
-    )
-
-    cjk = f"[{chr(CJK_LO)}-{chr(CJK_HI)}]"
 
     def _survives(t):
         # Catalyst twin of clean_text_spans' keep mask
-        c = F.translate(t, TRANSLATE_MATCHING, TRANSLATE_REPLACE)
-        parts = F.split(c, "=")
-        cleaned = F.when(
-            F.size(parts) > 2,
-            F.concat(F.element_at(parts, 1), F.lit("="), F.element_at(parts, -1)),
-        ).otherwise(c)
-        return (cleaned != F.lit("")) & ~cleaned.rlike(cjk)
+        cleaned = clean_expr(t)
+        return (cleaned != F.lit("")) & ~cleaned.rlike(CJK_PATTERN)
 
     emits_output = F.exists(
         "spans",
@@ -281,7 +256,7 @@ def extract_invariants(spans: DataFrame, docs: DataFrame) -> DataFrame:
             flag(is_text & (F.coalesce("media_ref", F.lit("")) != "")).alias(
                 "text_with_ref"
             ),
-            flag(is_text & F.col("text").rlike(cjk)).alias("cjk_text"),
+            flag(is_text & F.col("text").rlike(CJK_PATTERN)).alias("cjk_text"),
             flag(
                 is_media & ~F.col("text").rlike("^(right|error|problem):")
             ).alias("bad_media_text"),

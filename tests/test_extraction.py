@@ -1,6 +1,7 @@
 """Document-level extraction vs frozen oracle fixtures — no JVM: drives
-the same batch kernels the Spark plan wraps (``extract_doc_batch_arrow``
-through pa.RecordBatch, ``extract_span_batch`` through pandas)."""
+the batch kernel the Spark plan wraps (``extract_doc_batch_arrow``
+through pa.RecordBatch) the way both plan arms feed it: whole documents
+(light arm) and one-span documents re-ordered by a window (heavy arm)."""
 
 import os
 
@@ -9,7 +10,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from ocr_spark.operators.extract_batch import extract_doc_batch_arrow, extract_span_batch
+from ocr_spark.operators.extract_batch import extract_doc_batch_arrow
 from ocr_spark.sources.corpus import doc_ids, doc_spans
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "expected_spans.parquet")
@@ -18,6 +19,7 @@ SPAN_T = pa.struct(
      ("media_ref", pa.string()), ("offset", pa.int32())]
 )
 KEY = ["doc_id", "order"]
+COLS = ["doc_id", "order", "kind", "text", "media_ref"]
 
 
 def _record_batch(ids, spans) -> pa.RecordBatch:
@@ -26,31 +28,30 @@ def _record_batch(ids, spans) -> pa.RecordBatch:
     )
 
 
-def _doc_kernel(docs, split: int | None = None) -> pd.DataFrame:
-    """Run the Arrow doc kernel over ``docs`` (ids, spans), one
-    RecordBatch or ``split``-row batches; rows sorted by (doc_id, order)."""
+def _kernel(docs, split: int | None = None) -> pd.DataFrame:
+    """The kernel's raw output over ``docs`` (ids, spans), one
+    RecordBatch or ``split``-row batches."""
     ids, spans = docs
     step = split or max(len(ids), 1)
     batches = [_record_batch(ids[i : i + step], spans[i : i + step]) for i in range(0, len(ids), step)]
-    out = pa.Table.from_batches(list(extract_doc_batch_arrow(iter(batches)))).to_pandas()
-    return out.sort_values(KEY, ignore_index=True)
+    return pa.Table.from_batches(list(extract_doc_batch_arrow(iter(batches)))).to_pandas()
+
+
+def _doc_kernel(docs, split: int | None = None) -> pd.DataFrame:
+    """The light arm: whole documents, ``offset`` projected away; rows
+    sorted by (doc_id, order)."""
+    return _kernel(docs, split).sort_values(KEY, ignore_index=True)[COLS]
 
 
 def _span_kernel(docs, split: int | None = None) -> pd.DataFrame:
-    """Run the heavy-path span kernel over ``docs`` exploded to one span
-    per row, and restore ``order`` as the plan's window does."""
-    recs = [
-        (did, s["kind"], s["text"], s["media_ref"], s["offset"])
-        for did, spans in zip(*docs)
-        for s in spans
-    ]
-    flat = pd.DataFrame(recs, columns=["doc_id", "kind", "text", "media_ref", "offset"])
-    step = split or len(flat)
-    chunks = [flat.iloc[i : i + step] for i in range(0, len(flat), step)]
-    out = pd.concat(list(extract_span_batch(iter(chunks))), ignore_index=True)
-    out = out.sort_values(["doc_id", "offset", "seq"], ignore_index=True)
+    """The heavy arm: ``docs`` exploded to one-span documents, ``order``
+    restored as the plan's window does (doc_id ORDER BY offset, order)."""
+    ids = [did for did, spans in zip(*docs) for _ in spans]
+    one_span = [[s] for spans in docs[1] for s in spans]
+    out = _kernel((ids, one_span), split)
+    out = out.sort_values(["doc_id", "offset", "order"], ignore_index=True)
     out["order"] = out.groupby("doc_id").cumcount().astype("int32")
-    return out[["doc_id", "order", "kind", "text", "media_ref"]]
+    return out[COLS]
 
 
 @pytest.fixture(scope="module")
@@ -72,7 +73,7 @@ def test_doc_batch_matches_fixtures(expected, docs):
     out = _doc_kernel(docs)
     exp = expected.sort_values(KEY, ignore_index=True)
     assert len(out) == len(exp)
-    for col in ["doc_id", "order", "kind", "text", "media_ref"]:
+    for col in COLS:
         mism = (out[col].astype(str) != exp[col].astype(str)).sum()
         assert mism == 0, f"{mism} mismatches in {col}"
 
@@ -85,7 +86,7 @@ def test_span_batch_path_equals_doc_batch_path(docs):
 
 def test_batch_invariance(docs):
     """Splitting the input into different batch sizes must not change
-    either kernel's results (ordering is per-document, not per-batch)."""
+    either arm's results (ordering is per-document, not per-batch)."""
     head = _head(docs, 40)
     whole = _doc_kernel(head)
     assert len(whole) > 0
@@ -103,13 +104,14 @@ def test_arrow_kernel_empty_batch_and_empty_spans():
 
 def test_arrow_kernel_sorts_unsorted_offsets(docs):
     """Spans that arrive out of offset order take the kernel's lexsort
-    branch and emit exactly the rows of the offset-sorted input."""
+    branch and emit exactly the rows of the offset-sorted input, each
+    with its own source span's offset."""
     ids, spans = _head(docs, 30)
     assert any(len(s) > 1 for s in spans)
     reversed_spans = [list(reversed(s)) for s in spans]
-    got = _doc_kernel((ids, reversed_spans))
+    got = _kernel((ids, reversed_spans))
     assert len(got) > 0
-    pd.testing.assert_frame_equal(got, _doc_kernel((ids, spans)))
+    pd.testing.assert_frame_equal(got, _kernel((ids, spans)))
 
 
 _GOOD_TEXT = {"kind": "text", "text": "1+1=2", "media_ref": "", "offset": 0}
@@ -118,15 +120,16 @@ _MALFORMED = {
     "kind_image": {**_GOOD_MEDIA, "kind": "image"},
     "kind_null": {**_GOOD_TEXT, "kind": None},
     "media_ref_null": {**_GOOD_MEDIA, "media_ref": None},
+    "media_ref_empty": {**_GOOD_MEDIA, "media_ref": ""},
 }
 
 
 @pytest.mark.parametrize("kernel", [_doc_kernel, _span_kernel], ids=["arrow", "span"])
 @pytest.mark.parametrize("case", sorted(_MALFORMED))
 def test_malformed_span_raises_naming_doc(kernel, case):
-    """An unknown or null kind and a media span without a ref are
-    rejected, naming the document — not OCR'd as media, fabricated from
-    an empty ref or emitted with a null ref."""
+    """An unknown or null kind and a media span with a null or empty
+    ref are rejected, naming the document — not OCR'd as media,
+    fabricated from an empty ref or emitted with a null ref."""
     docs = (["ok-doc", "bad-doc"], [[_GOOD_TEXT], [_GOOD_TEXT, _MALFORMED[case]]])
     with pytest.raises(ValueError, match="bad-doc"):
         kernel(docs)

@@ -1,12 +1,16 @@
 """End-to-end Spark extraction vs frozen fixtures, plus light/heavy
-path equivalence through the real plan (mapInPandas + window)."""
+path equivalence through the real plan (both arms mapInArrow, the
+heavy one re-ordered by a window) and the plan's shape."""
 
+import contextlib
+import io
 import os
+import re
 
 import pyarrow.parquet as pq
 import pytest
 
-from ocr_spark.plans.extract import corpus_df, extract
+from ocr_spark.plans.extract import DOCS_SCHEMA, corpus_df, extract
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "expected_spans.parquet")
 
@@ -73,3 +77,22 @@ def test_corpus_schema(spark):
         schema
         == "struct<doc_id:string,spans:array<struct<kind:string,text:string,media_ref:string,offset:int>>>"
     )
+
+
+@pytest.mark.parametrize("source", ["local", "parquet"])
+def test_plan_runs_one_arrow_kernel_per_arm(spark, tmp_path, source):
+    """With the heavy arm in the plan, extract() runs the Arrow kernel
+    once per arm (two MapInArrow nodes) and no pandas kernel. The
+    source is not corpus_df, which is itself a mapInPandas."""
+    rows = [("d0", [("text", "1+1=2", "", 0), ("media", "", "m-000000000001", 1)])]
+    docs = spark.createDataFrame(rows, DOCS_SCHEMA)
+    if source == "parquet":
+        docs.write.parquet(str(tmp_path / "docs"))
+        docs = spark.read.parquet(str(tmp_path / "docs"))
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        extract(docs).explain("formatted")
+    plan = buf.getvalue()
+    # plan-tree nodes only ("+- MapInArrow (4)"), not the details section
+    assert len(re.findall(r"MapInArrow \(\d+\)\s*$", plan, flags=re.M)) == 2, plan
+    assert "MapInPandas" not in plan, plan

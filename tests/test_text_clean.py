@@ -1,16 +1,13 @@
 """Normalization kernel vs the reference replacement table
 (inference2.py:13-53) and double-'=' repair (inference.py:145-155)."""
 
-import pandas as pd
-
 from ocr_spark.functions.text_clean import (
     clean_text_series,
     collapse_double_eq,
     has_cjk,
-    has_cjk_series,
-    normalize_series,
     normalize_text,
 )
+from ocr_spark.operators.extract_batch import clean_text_spans
 
 PAIRS = [
     ("１＋２＝３", "1+2=3"),
@@ -28,8 +25,9 @@ PAIRS = [
 
 
 def test_normalize_scalar_and_series_agree():
-    raw = pd.Series([p[0] for p in PAIRS])
-    out = normalize_series(raw)
+    # no pair has a second '=', so the batch chain is normalization alone
+    out = clean_text_series([p[0] for p in PAIRS])
+    assert len(out) == len(PAIRS)
     for (r, expected), got in zip(PAIRS, out):
         assert got == expected == normalize_text(r)
 
@@ -42,14 +40,14 @@ def test_collapse_double_eq():
 
 
 def test_clean_chain():
-    s = pd.Series(["１＋１＝2＝2", "√7-3=4"])
-    out = clean_text_series(s)
-    assert list(out) == ["1+1=2", "7-3=4"]
+    assert clean_text_series(["１＋１＝2＝2", "√7-3=4"]) == ["1+1=2", "7-3=4"]
+    assert clean_text_series([]) == []
 
 
 def test_has_cjk():
     assert has_cjk("口算练习")
     assert not has_cjk("1+2=3")
     assert has_cjk("3+4=7题")
-    ser = has_cjk_series(pd.Series(["口算", "12", ""]))
-    assert list(ser) == [True, False, False]
+    cleaned, keep = clean_text_spans(["口算", "１２", "　"])
+    assert cleaned == ["口算", "12", ""]
+    assert keep.dtype == bool and keep.tolist() == [False, True, False]

@@ -26,6 +26,8 @@ def test_sql_registered_udfs(spark):
     ).first()
     assert got["c"] == "1+2=3"
     assert got["v"] == "right"
+    # a null stays null through the batch cleaning chain
+    assert spark.sql("SELECT ocr_clean_text(CAST(NULL AS STRING)) AS c").first()["c"] is None
 
 
 def test_ctc_greedy_udf(spark):

@@ -7,8 +7,8 @@ Checks:
 - small dims enter joins as BroadcastHashJoin (never as the build side
   of a SortMergeJoin);
 - relational shells run inside WholeStageCodegen;
-- the extraction plan shows the two-path split (two ArrowEvalPython /
-  MapInPandas nodes) and no extra shuffles.
+- the extraction plan runs the Arrow kernel (MapInArrow), and with a
+  known media bound under the heavy threshold it scans its source once.
 
 Usage: python tools/explain_audit.py [--sf-dir /root/testdata/sf0.01]
 Exits non-zero if any REQUIRE fails.
