@@ -26,6 +26,10 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+# before pyspark.sql, which loads numpy: the package picks OpenBLAS's
+# kernel set only while numpy is not yet loaded (ocr_spark/blaskernel.py)
+import ocr_spark  # noqa: F401, I001
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ocr_spark.functions import sparse

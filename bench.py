@@ -64,6 +64,12 @@ DEFAULT_QUERIES = [
 ]
 
 
+def _worker_blas_core(_) -> str | None:
+    from ocr_spark.blaskernel import corename
+
+    return corename()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
@@ -107,6 +113,14 @@ def main() -> None:
         for jrdd in list(jmap.values()):
             jrdd.unpersist(False)
 
+    # the OpenBLAS kernel set behind each recorded number (see
+    # ocr_spark/blaskernel.py): the driver's and one Python worker's
+    from ocr_spark.blaskernel import corename
+
+    blas_core = {
+        "driver": corename(),
+        "worker": spark.sparkContext.parallelize([0], 1).map(_worker_blas_core).first(),
+    }
     loadavg_start = os.getloadavg()
     for name in names:
         t0 = time.time()
@@ -140,6 +154,7 @@ def main() -> None:
                 # start and end — a run taken under contention is
                 # self-describing (see BENCH/BASELINE.md protocol)
                 "loadavg_start": [round(x, 2) for x in loadavg_start],
+                "blas_core": blas_core,
                 "loadavg_end": [round(x, 2) for x in loadavg_end],
             }
         )

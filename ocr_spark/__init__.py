@@ -24,7 +24,14 @@ per-row Python UDFs, no custom Catalyst rules.
 
 __version__ = "0.1.0"
 
+from ocr_spark import blaskernel as _blaskernel
 from ocr_spark import zipcache as _zipcache
+
+# before numpy first loads, here and (through the inherited environment)
+# in the JVM and Python workers a session starts: OpenBLAS's AVX-512 or
+# AVX2 kernels, not the SSE3 fallback of a CPU model it does not know
+# (see ocr_spark/blaskernel.py)
+_blaskernel.select()
 
 # every Python worker imports this package when it unpickles an engine
 # UDF: from then on its per-task importlib.invalidate_caches() stops

@@ -354,11 +354,15 @@ def class_probs(feats: np.ndarray, weights: dict) -> np.ndarray:
     e = np.exp(logits)
     p = e / e.sum(axis=1, keepdims=True)
     # quantize: BLAS matmul summation order differs between driver and
-    # pinned executor threads by ~1e-15 relative — enough to flip a
-    # near-tied beam ordering. 10-decimal rounding is 5 orders above
-    # the noise floor and far below any decision margin, so decode is
+    # pinned executor threads, and between OpenBLAS kernel sets, by
+    # ~1e-15 relative — enough to flip a near-tied beam ordering.
+    # 10-decimal rounding is 5 orders above the noise floor and far
+    # below any decision margin, so for given weights decode is
     # bit-identical wherever (and in whichever algebraic form) the
-    # forward pass runs.
+    # forward pass runs. The weights themselves are not: the driver's
+    # ridge-solve build (sources/weights.py) follows the driver's BLAS
+    # kernel, and weights built on a different kernel set can move a
+    # rare near-tied page.
     return np.round(p, 10)
 
 

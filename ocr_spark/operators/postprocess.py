@@ -233,10 +233,12 @@ def extract_media_spans_batch(
       (``_beam_backups``), before any page is routed.
 
     Measured split of this chain (traced one-process kernel pass of the
-    perfbench ``mixed`` sample, 24 documents, 4-core VM): the forward
-    pass (``box_probs_batch``) 75%, page prep (recipe, detect, layout)
-    16%, the beam retry 5%, greedy decode, verdicts and routing under
-    2%.
+    perfbench ``mixed`` sample, 24 documents, seeds 11-13, 4-core VM,
+    OpenBLAS ``SkylakeX`` kernels): the forward pass
+    (``box_probs_batch``) 62-63%, page prep (recipe, detect, layout)
+    21-26%, the beam retry 6-7%, verdicts 1-6%, greedy decode and
+    routing about 1%. On the SSE3 ``Prescott`` fallback the forward
+    pass was 69-76%.
 
     A page's texts do not depend on the other pages of the call
     (asserted by test_crnn and test_extraction). ``weights`` is the

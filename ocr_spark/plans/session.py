@@ -99,7 +99,17 @@ def build_submit_session(
     cannot happen here: OpenBLAS reads its thread env once, when numpy
     loads, and the job's ``ocr_spark`` imports have loaded it by the
     time this runs. A submitted script pins it before its first
-    ``ocr_spark`` import, as ``jobs/bench_extract.py`` does."""
+    ``ocr_spark`` import, as ``jobs/bench_extract.py`` does.
+
+    OpenBLAS's kernel choice (``OPENBLAS_CORETYPE``, set from the CPU's
+    flags by ``ocr_spark/blaskernel.py`` when the package is imported)
+    reaches the Python driver only: under spark-submit the JVM and its
+    Python workers start before it, and on a cluster the executors'
+    CPUs need not be the driver's. There the launcher has to carry it
+    (``OPENBLAS_CORETYPE=SkylakeX spark-submit ...`` in local mode,
+    ``--conf spark.executorEnv.OPENBLAS_CORETYPE=SkylakeX`` for AVX-512
+    executors), or the workers run whatever OpenBLAS picks from their
+    CPU model id."""
     b = _tuned_conf(SparkSession.builder.appName(app_name), shuffle_partitions)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

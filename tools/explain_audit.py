@@ -20,6 +20,7 @@ import argparse
 import contextlib
 import io
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -254,6 +255,15 @@ AUDITS: list[tuple[str, list[str], list[str]]] = [
 ]
 
 
+def _stable(plan: str, app_id: str) -> str:
+    """``plan`` as docs/PLANS.md shows it: expression ids (``doc_id#448``),
+    ``plan_id``s and the application id (in the bucketed staging tables'
+    names), which change from run to run, become placeholders, so a
+    regenerated file differs only where a plan did."""
+    plan = plan.replace(app_id.replace("-", "_"), "APP")
+    return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
@@ -264,6 +274,7 @@ def main() -> None:
 
     spark = build_session(master="local[4]", app_name="explain_audit")
     spark.sparkContext.setLogLevel("ERROR")
+    app_id = spark.sparkContext.applicationId
     qs = entry.queries()
 
     failures: list[str] = []
@@ -286,7 +297,7 @@ def main() -> None:
             if not ok:
                 failures.append(f"{name}: contains forbidden {f!r}")
         sections.append(
-            f"## {name}\n\n" + "\n".join(status) + "\n\n```\n" + plan.strip() + "\n```\n"
+            f"## {name}\n\n" + "\n".join(status) + "\n\n```\n" + _stable(plan, app_id).strip() + "\n```\n"
         )
         print(name, "OK" if not any("FAIL" in s for s in status) else "FAIL", flush=True)
 
@@ -300,7 +311,6 @@ def main() -> None:
     with contextlib.redirect_stdout(buf):
         benign.explain("formatted")
     plan = buf.getvalue()
-    import re
 
     # count plan-tree scan NODES only ("* Range (1)"), not the details
     # section's "Arguments: Range (0, 64, ...)" echo
@@ -310,7 +320,7 @@ def main() -> None:
         failures.append(f"extract_single_scan: {n_scans} scans in max_media-bounded plan")
     sections.append(
         "## extract (max_media=8, benign batch) — single-scan contract\n\n"
-        + "\n".join(status) + "\n\n```\n" + plan.strip() + "\n```\n"
+        + "\n".join(status) + "\n\n```\n" + _stable(plan, app_id).strip() + "\n```\n"
     )
     print("extract_single_scan", "OK" if n_scans == 1 else "FAIL", flush=True)
 
