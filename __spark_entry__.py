@@ -76,8 +76,9 @@ def _q_extract_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structural invariants of the REAL extraction output — the
     oracle-checkable face of the fixture-gated family (the oracle pins
     every violation counter to 0, the input-doc count to
-    count(documents), and unaccounted_docs — expected-surviving minus
-    observed output docs, both computed, no literals — to 0)."""
+    count(documents), and unaccounted_docs — input docs with a
+    surviving text span missing from the output plus output docs
+    missing from the input, computed, no literal — to 0)."""
     n_docs = _t(spark, sf_dir, "documents").count()
     corpus = corpus_df(spark, n_docs)
     return extract_invariants(extract(corpus), corpus)
@@ -977,7 +978,7 @@ _CORPUS_PIPELINE_SQL = f"""
 """
 
 # shared by the domain_mix_weights and apply_domain_mix oracles
-_DOMAIN_MIX_SQL = """
+_DOMAIN_MIX_SQL = f"""
         WITH per AS (
           SELECT source, count(*) AS n_docs,
                  CAST(sum(len(list_filter(string_split(text, ' '),
@@ -987,7 +988,7 @@ _DOMAIN_MIX_SQL = """
         s AS (SELECT per.*,
                      CAST(per.n_tokens AS DOUBLE) / tot.tot AS p,
                      CAST(round(pow(CAST(per.n_tokens AS DOUBLE) / tot.tot,
-                                    0.3) * 1e9, 0) AS BIGINT) AS s_nano
+                                    {corpus.MIX_ALPHA}) * 1e9, 0) AS BIGINT) AS s_nano
               FROM per, tot),
         d AS (SELECT CAST(sum(s_nano) AS BIGINT) AS denom FROM s)
         SELECT source, n_docs, n_tokens, round(p, 6) AS p,
@@ -1540,12 +1541,12 @@ ORACLES: dict[str, str] = {
           SELECT doc_id, n_feats, logw,
                  round(logw
                        + (-ln(-ln(
-                           (('0x' || substr(md5('dsir-g:0:'
+                           (('0x' || substr(md5('dsir-g:{corpus.DSIR_SEED}:'
                                 || CAST(doc_id AS VARCHAR)), 1, 14))::BIGINT
                             + 0.5) / {float(2 ** 56)}))), 6) AS score
           FROM w)
         SELECT doc_id, n_feats, logw, score,
-               coalesce(score > -11.0, FALSE) AS selected
+               coalesce(score > {corpus.DSIR_THRESHOLD}, FALSE) AS selected
         FROM g
     """,
     # bigram LM: identical add-k model and micro-nat quantization; the
@@ -1886,7 +1887,7 @@ ORACLES: dict[str, str] = {
                      ORDER BY md5('cbs:' || CAST(vec_id AS VARCHAR)),
                               vec_id) AS cell_rank
           FROM kassign)
-        SELECT vec_id, cell_id, cell_rank, cell_rank <= 40 AS kept
+        SELECT vec_id, cell_id, cell_rank, cell_rank <= {similarity.CELL_CAP} AS kept
         FROM r
     """,
     "ivf_kmeans_recall": f"""

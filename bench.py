@@ -75,6 +75,13 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
     names = os.environ.get("OCR_BENCH_QUERIES", ",".join(DEFAULT_QUERIES)).split(",")
 
+    # one BLAS thread in the driver too, set before numpy first loads:
+    # the host normaliser below is then the single-thread kernel
+    # ceiling that perfbench measures
+    from ocr_spark.blaskernel import pin_threads
+
+    pin_threads()
+
     import __spark_entry__ as entry
     from ocr_spark.plans.session import build_session
 
@@ -121,6 +128,12 @@ def main() -> None:
         "driver": corename(),
         "worker": spark.sparkContext.parallelize([0], 1).map(_worker_blas_core).first(),
     }
+    # host normaliser, measured in the same window: crops/s of the
+    # single-process OCR chain over a fixed input (perfbench/kernel.py)
+    from ocr_spark.sources.weights import default_weights
+    from perfbench.kernel import ceiling, ceiling_refs
+
+    ceiling_crops_per_s = ceiling(ceiling_refs(), default_weights())[0]
     loadavg_start = os.getloadavg()
     for name in names:
         t0 = time.time()
@@ -155,6 +168,10 @@ def main() -> None:
                 # self-describing (see BENCH/BASELINE.md protocol)
                 "loadavg_start": [round(x, 2) for x in loadavg_start],
                 "blas_core": blas_core,
+                "ceiling_crops_per_s": round(ceiling_crops_per_s, 1),
+                "docs_per_sec_per_ceiling": (
+                    round(docs_per_sec / ceiling_crops_per_s, 6) if docs_per_sec else None
+                ),
                 "loadavg_end": [round(x, 2) for x in loadavg_end],
             }
         )

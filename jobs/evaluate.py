@@ -5,8 +5,8 @@ the seq/state/char-accuracy + recall rollup.
 
 Cluster launch (north_rule):
 
-    zip -r ocr_spark.zip ocr_spark/
-    spark-submit --py-files ocr_spark.zip jobs/evaluate.py \\
+    python tools/make_pyfiles.py
+    spark-submit --py-files dist/ocr_spark.zip jobs/evaluate.py \\
         --gold <parquet of (doc_id, box_id, left, top, right, bottom,
                             classes, label, state)> \\
         --pred <parquet of (doc_id, pred_id, left, top, right, bottom,
@@ -50,14 +50,12 @@ def main() -> None:
         iou_argmax_pairs,
         pred_boxes,
     )
-    from ocr_spark.plans.session import build_session
+    from ocr_spark.plans.session import build_session, build_submit_session
 
     if args.master:
         spark = build_session(master=args.master, app_name="ocr_spark_evaluate")
     else:
-        from pyspark.sql import SparkSession  # noqa: PLC0415
-
-        spark = SparkSession.builder.appName("ocr_spark_evaluate").getOrCreate()
+        spark = build_submit_session(app_name="ocr_spark_evaluate")
     spark.sparkContext.setLogLevel("WARN")
 
     if args.synthetic:

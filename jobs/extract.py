@@ -2,8 +2,8 @@
 
 Cluster launch (north_rule):
 
-    zip -r ocr_spark.zip ocr_spark/
-    spark-submit --py-files ocr_spark.zip jobs/extract.py \\
+    python tools/make_pyfiles.py
+    spark-submit --py-files dist/ocr_spark.zip jobs/extract.py \\
         --input  <corpus path or 'synthetic:<n_docs>'> \\
         --output <snapshot-store root> \\
         --buckets 4096 --group-size 256
@@ -42,16 +42,21 @@ def main() -> None:
                     help="override master (default: whatever spark-submit set)")
     args = ap.parse_args()
 
+    # driver-side BLAS pinning must happen BEFORE numpy loads (the next
+    # imports load it): OpenBLAS reads its thread env once, and
+    # build_submit_session runs too late to set it
+    from ocr_spark.blaskernel import pin_threads
+
+    pin_threads()
+
     from ocr_spark.plans.extract import corpus_df
     from ocr_spark.plans.io import SnapshotStore, run_extract_job
-    from ocr_spark.plans.session import build_session
+    from ocr_spark.plans.session import build_session, build_submit_session
 
     if args.master:
         spark = build_session(master=args.master, app_name="ocr_spark_extract")
     else:
-        from pyspark.sql import SparkSession  # noqa: PLC0415
-
-        spark = SparkSession.builder.appName("ocr_spark_extract").getOrCreate()
+        spark = build_submit_session(app_name="ocr_spark_extract")
     spark.sparkContext.setLogLevel("WARN")
 
     if args.input.startswith("synthetic:"):

@@ -22,6 +22,9 @@ driver, and on a cluster the executors' CPUs need not be the driver's:
 there the launcher has to carry ``OPENBLAS_CORETYPE`` (its own
 environment in local mode, ``spark.executorEnv.OPENBLAS_CORETYPE`` for
 executors).
+
+:func:`pin_threads` is the other half of a driver's BLAS set-up: one
+thread per process, since Spark supplies the parallelism.
 """
 
 from __future__ import annotations
@@ -32,6 +35,13 @@ import sys
 
 _AVX512 = frozenset(("avx512f", "avx512vl", "avx512bw", "avx512dq", "avx512cd"))
 _AVX2 = frozenset(("avx2", "fma"))
+THREAD_VARS = (
+    "OMP_NUM_THREADS",
+    "OPENBLAS_NUM_THREADS",
+    "MKL_NUM_THREADS",
+    "NUMEXPR_NUM_THREADS",
+    "VECLIB_MAXIMUM_THREADS",
+)
 
 
 def core_for(flags) -> str | None:
@@ -66,6 +76,16 @@ def select() -> None:
     core = core_for(cpu_flags() or ())
     if core is not None:
         os.environ["OPENBLAS_CORETYPE"] = core
+
+
+def pin_threads() -> None:
+    """One BLAS thread per process, unless a value is already set: task
+    parallelism comes from Spark, not from numpy. OpenBLAS reads its
+    thread count once, when numpy loads, so a driver calls this before
+    its first numpy import; later, it still reaches the local JVM and
+    Python workers a session starts, which inherit the environment."""
+    for var in THREAD_VARS:
+        os.environ.setdefault(var, "1")
 
 
 def corename() -> str | None:

@@ -546,8 +546,10 @@ def dup_gram_stats(docs: DataFrame, n: int = GRAM_N) -> DataFrame:
 
 # -- domain mixture planning -------------------------------------------------
 
+MIX_ALPHA = 0.3
 
-def domain_mix_weights(docs: DataFrame, alpha: float = 0.3) -> DataFrame:
+
+def domain_mix_weights(docs: DataFrame, alpha: float = MIX_ALPHA) -> DataFrame:
     """Temperature-scaled source-mixing plan — the multinomial
     alpha-sampling recipe (XLM-R's alpha=0.3 / the LLaMA data-mix
     shape): a source holding token share p_i is sampled with
@@ -598,6 +600,8 @@ def domain_mix_weights(docs: DataFrame, alpha: float = 0.3) -> DataFrame:
 
 DSIR_BUCKETS = 4096
 DSIR_K = 0.5
+DSIR_THRESHOLD = -11.0
+DSIR_SEED = 0
 
 
 def _dsir_features(docs: DataFrame) -> DataFrame:
@@ -726,8 +730,8 @@ def dsir_target_split(docs: DataFrame, prefix_lt: str = "4") -> DataFrame:
 def dsir_resample(
     docs: DataFrame,
     target: DataFrame,
-    threshold: float = -11.0,
-    seed: int = 0,
+    threshold: float = DSIR_THRESHOLD,
+    seed: int = DSIR_SEED,
     buckets: int = DSIR_BUCKETS,
     k: float = DSIR_K,
 ) -> DataFrame:
@@ -813,7 +817,7 @@ def corpus_report(docs: DataFrame) -> DataFrame:
     return totals.crossJoin(F.broadcast(dup))
 
 
-def apply_domain_mix(docs: DataFrame, alpha: float = 0.3) -> DataFrame:
+def apply_domain_mix(docs: DataFrame, alpha: float = MIX_ALPHA) -> DataFrame:
     """Execute the ``domain_mix_weights`` plan (the planning/execution
     split of dedup_summary vs dedupped_corpus): downsample each source
     by its keep-probability ``min(sample_rate, 1)`` with the

@@ -48,6 +48,7 @@ def knn_cosine_topk(emb: DataFrame, every: int = 500, k: int = 10) -> DataFrame:
 
 CENTROID_STRIDE = 100  # every 100th vector acts as a codebook entry
 QUERY_EVERY = 50
+CELL_CAP = 40  # cluster_balanced_sample's per-cell member cap
 
 
 def _codebook(e: DataFrame, stride: int) -> DataFrame:
@@ -366,7 +367,7 @@ def semdedup_corpus(
 
 def cluster_balanced_sample(
     emb: DataFrame,
-    cap: int = 40,
+    cap: int = CELL_CAP,
     stride: int = CENTROID_STRIDE,
     codebook: DataFrame | None = None,
 ) -> DataFrame:

@@ -214,31 +214,22 @@ def extract_invariants(spans: DataFrame, docs: DataFrame) -> DataFrame:
       text with state in {right, error, problem};
     - text rows are CJK-free (boilerplate strip ran) and carry no ref.
 
-    Doc accounting is LOAD-BEARING, not a pass-through literal: a
-    document legitimately vanishes from the output only when it has no
-    media span and every text span is boilerplate-stripped (cleans to
-    '' or still contains CJK — extract_batch.clean_text_spans). The
-    expected surviving-doc count is recomputed over the INPUT corpus
-    with the same predicate as a codegen ``exists`` expression, and
-    ``unaccounted_docs`` = expected − observed is pinned to 0 by the
-    oracle — a silently dropped document is a hard mismatch. One
-    shuffle on doc_id for the output aggregate plus one map-side
-    aggregate over the input; both all-column-pruned scans."""
+    Doc accounting is exact over what the engine guarantees. A
+    document with a surviving text span (one that cleans to a non-empty,
+    CJK-free string — extract_batch.clean_text_spans' keep mask, here
+    as a codegen ``exists`` expression) always reaches the output; a
+    media span may emit no line (a page whose boxes are all dropped),
+    so a document without a surviving text span may vanish. So
+    ``unaccounted_docs`` counts the input documents with a surviving
+    text span that are absent from the output, plus the output
+    documents absent from the input. The oracle pins it to 0: a
+    silently dropped or invented document is a hard mismatch."""
 
     def _survives(t):
         # Catalyst twin of clean_text_spans' keep mask
         cleaned = clean_expr(t)
         return (cleaned != F.lit("")) & ~cleaned.rlike(CJK_PATTERN)
 
-    emits_output = F.exists(
-        "spans",
-        lambda s: (s["kind"] == F.lit("media"))
-        | ((s["kind"] == F.lit("text")) & _survives(s["text"])),
-    )
-    expected = docs.agg(
-        F.count("*").cast("bigint").alias("n_docs_in"),
-        F.sum(emits_output.cast("bigint")).alias("_expected_out"),
-    )
     is_text = F.col("kind") == "text"
     is_media = F.col("kind") == "media"
 
@@ -274,30 +265,29 @@ def extract_invariants(spans: DataFrame, docs: DataFrame) -> DataFrame:
             F.sum("bad_media_text").alias("bad_media_text"),
         )
     )
+    must_emit = F.exists(
+        "spans", lambda s: (s["kind"] == F.lit("text")) & _survives(s["text"])
+    )
+    ins = docs.groupBy("doc_id").agg(
+        F.count("*").alias("n_in"), F.max(must_emit).alias("must_emit")
+    )
+    # one full outer join on doc_id holds both anti-joins, so the
+    # output is aggregated (and, unmaterialized, extracted) once
+    both = per_doc.join(ins, "doc_id", "full_outer")
+    in_input, in_output = F.col("n_in").isNotNull(), F.col("c").isNotNull()
+    lost = in_input & F.col("must_emit") & ~in_output
+    invented = in_output & ~in_input
     contiguous = (
         (F.col("mn") == 0) & (F.col("mx") == F.col("c") - 1) & (F.col("cd") == F.col("c"))
     )
-    observed = per_doc.agg(
-        F.count("*").cast("bigint").alias("_n_docs_out"),
+    return both.agg(
+        F.coalesce(F.sum("n_in"), F.lit(0)).cast("bigint").alias("n_docs_in"),
+        F.count(F.when(lost | invented, 1)).cast("bigint").alias("unaccounted_docs"),
         F.sum(F.when(~contiguous, 1).otherwise(0)).alias("bad_order_docs"),
         F.sum("bad_kind").alias("bad_kind_rows"),
         F.sum("media_no_ref").alias("media_no_ref_rows"),
         F.sum("text_with_ref").alias("text_with_ref_rows"),
         F.sum("cjk_text").alias("cjk_text_rows"),
         F.sum("bad_media_text").alias("bad_media_text_rows"),
-        (F.count("*") > 0).cast("int").alias("has_output"),
-    )
-    # both sides are single rows; the join is a trivial broadcast
-    return observed.crossJoin(expected).select(
-        "n_docs_in",
-        (F.col("_expected_out") - F.col("_n_docs_out"))
-        .cast("bigint")
-        .alias("unaccounted_docs"),
-        "bad_order_docs",
-        "bad_kind_rows",
-        "media_no_ref_rows",
-        "text_with_ref_rows",
-        "cjk_text_rows",
-        "bad_media_text_rows",
-        "has_output",
+        (F.count("c") > 0).cast("int").alias("has_output"),
     )

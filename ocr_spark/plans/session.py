@@ -98,8 +98,9 @@ def build_submit_session(
     same tuned set as :func:`build_session`. Driver-side BLAS pinning
     cannot happen here: OpenBLAS reads its thread env once, when numpy
     loads, and the job's ``ocr_spark`` imports have loaded it by the
-    time this runs. A submitted script pins it before its first
-    ``ocr_spark`` import, as ``jobs/bench_extract.py`` does.
+    time this runs. A submitted script pins it with
+    ``blaskernel.pin_threads()`` before numpy loads, as
+    ``jobs/extract.py`` does.
 
     OpenBLAS's kernel choice (``OPENBLAS_CORETYPE``, set from the CPU's
     flags by ``ocr_spark/blaskernel.py`` when the package is imported)

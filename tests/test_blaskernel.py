@@ -76,6 +76,15 @@ def test_user_value_is_kept():
     assert running in (None, "Sandybridge")
 
 
+def test_pin_threads_sets_one_thread_and_keeps_a_user_value(monkeypatch):
+    for var in blaskernel.THREAD_VARS:
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setenv("OMP_NUM_THREADS", "3")
+    blaskernel.pin_threads()
+    assert os.environ["OMP_NUM_THREADS"] == "3"
+    assert all(os.environ[v] == "1" for v in blaskernel.THREAD_VARS[1:])
+
+
 def test_numpy_loaded_first_leaves_the_variable_unset():
     env_core, _ = _child("import numpy\nimport ocr_spark\n" + _REPORT)
     assert env_core is None

@@ -64,10 +64,41 @@ def test_invariants_doc_accounting_is_load_bearing(spark):
     assert good["n_docs_in"] == 200
     assert good["unaccounted_docs"] == 0
 
-    # drop one doc that we know emits output (doc 0 has media spans)
-    broken = out.where(F.col("doc_id") != "doc-00000000")
+    # drop one doc that must emit output: it has a surviving text span
+    kept = out.where(F.col("kind") == "text").select("doc_id").first()["doc_id"]
+    broken = out.where(F.col("doc_id") != kept)
     bad = extract_invariants(broken, docs).first()
     assert bad["unaccounted_docs"] == 1
+
+
+# a CJK boilerplate text span plus one page whose boxes are all dropped:
+# correct output has no row for it
+EMPTY_DOC = "doc-73627082"
+
+
+def test_invariants_accept_a_doc_whose_pages_emit_nothing(spark):
+    from ocr_spark.plans.extract import extract_invariants
+    from ocr_spark.sources.corpus import doc_spans
+
+    empty = spark.createDataFrame([(EMPTY_DOC, doc_spans(EMPTY_DOC))], DOCS_SCHEMA)
+    docs = corpus_df(spark, 20).unionByName(empty)
+    out = extract(docs)
+    assert out.where(out.doc_id == EMPTY_DOC).count() == 0
+    inv = extract_invariants(out, docs).first()
+    assert inv["n_docs_in"] == 21
+    assert inv["unaccounted_docs"] == 0
+
+
+def test_invariants_flag_an_output_doc_not_in_the_input(spark):
+    from pyspark.sql import functions as F
+
+    from ocr_spark.plans.extract import extract_invariants
+
+    docs = corpus_df(spark, 20)
+    out = extract(docs)
+    invented = out.where(out.order == 0).limit(1).withColumn("doc_id", F.lit("doc-invented"))
+    inv = extract_invariants(out.unionByName(invented), docs).first()
+    assert inv["unaccounted_docs"] == 1
 
 
 def test_corpus_schema(spark):

@@ -4,9 +4,8 @@ The north rule's deployment sentence is "run via spark-submit
 --py-files on a multi-executor cluster" — these tests pin the two
 halves: the artifact builder (deterministic, package-only zip) and an
 actual cold ``spark-submit --master local-cluster --py-files`` launch
-of jobs/bench_extract.py from a scratch directory where the zip is the
-only possible source of the package (tools/run_submit_scaling.py runs
-the same shape as the timed protocol)."""
+of the production job, jobs/extract.py, copied to a scratch directory
+where the zip is the only possible source of the package."""
 
 import json
 import os
@@ -47,8 +46,11 @@ def test_zip_is_deterministic(tmp_path):
     not os.path.exists(SPARK_SUBMIT), reason="spark-submit not installed"
 )
 def test_spark_submit_pyfiles_launch(spark, tmp_path):
-    """Cold spark-submit, 1 executor x 2 cores, zip-only imports."""
+    """Cold spark-submit of jobs/extract.py, 1 executor x 2 cores,
+    zip-only imports: the committed snapshot holds the in-process
+    engine's doc set."""
     from ocr_spark.plans.extract import corpus_df, extract
+    from ocr_spark.plans.io import SnapshotStore
 
     corpus = str(tmp_path / "corpus")
     corpus_df(spark, 64, partitions=4).write.parquet(corpus)
@@ -61,7 +63,9 @@ def test_spark_submit_pyfiles_launch(spark, tmp_path):
     zip_path = build_zip(str(tmp_path / "ocr_spark.zip"))
     scratch = tmp_path / "launch"
     scratch.mkdir()
-    shutil.copy(os.path.join(REPO, "jobs", "bench_extract.py"), scratch)
+    # the job's sys.path.insert resolves to tmp_path, which holds no
+    # ocr_spark/ directory: imports come from the zip only
+    shutil.copy(os.path.join(REPO, "jobs", "extract.py"), scratch)
     out = str(tmp_path / "out")
     p = subprocess.run(
         [
@@ -70,20 +74,22 @@ def test_spark_submit_pyfiles_launch(spark, tmp_path):
             "--driver-memory", "2g",
             "--py-files", zip_path,
             "--conf", "spark.ui.enabled=false",
-            str(scratch / "bench_extract.py"),
-            "--corpus", corpus, "--out", out,
-            "--shuffle", "4", "--warm-docs", "8",
+            str(scratch / "extract.py"),
+            "--input", corpus, "--output", out,
+            "--buckets", "4", "--group-size", "4",
         ],
         capture_output=True, text=True, cwd=scratch,
         env={**os.environ, "PYTHONPATH": ""},
         timeout=300,
     )
     assert p.returncode == 0, p.stderr[-3000:]
-    r = json.loads(p.stdout.strip().splitlines()[-1])
-    assert r["n_docs_out"] == len(expected)
-    # the child's output matches the in-process engine's doc set
+    # the summary line precedes the per-bucket metrics table
+    (line,) = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
+    r = json.loads(line)
+    assert r["committed_buckets"] == 4
+    assert r["n_docs"] == 64
     got = {
         row["doc_id"]
-        for row in spark.read.parquet(out).select("doc_id").distinct().collect()
+        for row in SnapshotStore(out).read(spark).select("doc_id").distinct().collect()
     }
     assert got == expected
