@@ -268,17 +268,6 @@ def _with_perm_consts(body: str) -> str:
     )
 
 
-def _minhash_sig_sql(words: str) -> str:
-    """Elementwise min over shingles -> array<bigint> of 64 signature
-    values (one aggregate pass, no UDF)."""
-    return _with_perm_consts(
-        f"aggregate({_shingles_sql(words)}, "
-        f"array_repeat(cast({_PERM_SENTINEL} as bigint), {N_PERMS}), "
-        f"(acc, sh) -> zip_with(acc, {_perm_values_sql('sh')}, "
-        f"(a, v) -> least(a, v)))"
-    )
-
-
 def _band_keys_sql(words: str) -> str:
     """b=16 band keys (band index baked into the key, so keys only
     collide within the same band) computed in ONE aggregate pass over

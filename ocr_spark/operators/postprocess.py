@@ -54,9 +54,11 @@ def _recognize_pages(
     forward pass runs width-bucketed across ALL crops of the batch
     (sources.media.box_probs_batch — one BLAS matmul per bucket instead
     of one per crop), then the broadcast class projection (M7,
-    reference pipline.py:684-685) and ONE vectorized greedy decode over
-    the pad-to-max batch (the reference's utils.py:171-180 + one
-    sess.run). Assigns node.probs / node.output in place."""
+    reference pipline.py:684-685) and one vectorized greedy decode per
+    group of equal-length matrices (the reference's utils.py:171-180
+    batched sess.run). Rows of one group share T, so no pad-to-max copy
+    of the whole batch is made. Assigns node.probs / node.output in
+    place."""
     items = [(page, n.bbox) for page, nodes in pages_nodes for n in nodes]
     if not items:
         return
@@ -65,12 +67,16 @@ def _recognize_pages(
     from ocr_spark.sources.media import box_probs_batch
 
     mats = [project_probs(m, weights) for m in box_probs_batch(items, weights)]
-    lengths = np.array([m.shape[0] for m in mats], dtype=np.int64)
-    t_max = int(lengths.max())
-    batch = np.zeros((len(mats), t_max, mats[0].shape[1]), dtype=np.float64)
+    by_t: dict[int, list[int]] = {}
     for i, m in enumerate(mats):
-        batch[i, : m.shape[0]] = m
-    outputs = greedy_decode_batch(batch, lengths)
+        by_t.setdefault(m.shape[0], []).append(i)
+    outputs: list = [None] * len(mats)
+    for t, idxs in by_t.items():
+        texts = greedy_decode_batch(
+            np.stack([mats[i] for i in idxs]), np.full(len(idxs), t, dtype=np.int64)
+        )
+        for i, text in zip(idxs, texts):
+            outputs[i] = text
     flat_nodes = [n for _, nodes in pages_nodes for n in nodes]
     for node, mat, out in zip(flat_nodes, mats, outputs):
         node.probs = mat
@@ -213,8 +219,12 @@ def _finish_page(all_nodes: list[Node], forests: list[list[Node]]) -> list[str]:
 
 
 # recognition batches this many pages at once: bounds the live
-# node.probs matrices (~17 KB each, ~4 nodes/page -> ~35 MB/chunk)
-# while keeping the width buckets full enough to amortize the matmuls
+# node.probs matrices (~17 KB each, ~4 nodes/page -> ~35 MB/chunk; the
+# rendered crops are not counted here, box_probs_batch keeps at most
+# one forward slice of them alive) while keeping the width buckets
+# full enough to amortize the matmuls. 64-page chunks were no cheaper:
+# 11.4 vs 11.2 CPU-s over the light docs of one perfbench `mixed` pass
+# in 125-doc calls (one process, median of 3).
 _PAGE_CHUNK = 512
 
 

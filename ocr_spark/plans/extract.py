@@ -49,8 +49,27 @@ building the plan starts no Spark job and reads no data file:
   sources (a generated range) are uniform by construction and never
   salt.
 
-Both paths produce identical rows (tested), so both rules are pure
-performance choices.
+Both repartitions, the salt and the heavy arm's, are ``2 * parallelism``
+buckets wide: two task waves, the 2x-cores rule ``build_session`` uses
+for ``spark.sql.shuffle.partitions``. Narrower means fewer tasks, each
+with its fixed set-up, and fuller kernel calls; wider means a shorter
+straggler tail. The balance moved once already:
+
+- at local[32] on the 64-partition protocol corpus, when a task's
+  worker set-up cost ~0.3 s, 8 waves won: 2 waves 20.9 s, 4 waves
+  17.9 s, 8 waves 16.2 s (3 interleaved cold-JVM reps,
+  BENCH/NOTES_r4.md §11);
+- with the set-up at ~0.03 s (``ocr_spark/zipcache.py``), 2 waves won
+  on the 4-core host: the perfbench ``mixed`` pass runs 22 tasks
+  instead of 70, its kernel calls see ~125 documents instead of ~31,
+  and its docs/s median rose 132.9 -> 161.2 (10 alternating pairs,
+  9 won) while CPU-s per 1k docs fell 28.1 -> 22.6.
+
+The 32-core trade-off has not been re-measured since: the host that
+runs the benchmark has 4 cores.
+
+Both paths produce identical rows (tested), so the rules and the width
+are pure performance choices.
 """
 
 from __future__ import annotations
@@ -145,17 +164,12 @@ def extract(
     no data file: both rules need only the file listing."""
     spark = docs.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
-    # Salted-repartition width: 8 task waves per core. 2 waves leaves
-    # the straggler tail the salt exists to remove — measured at
-    # local[32] on the 64-partition protocol corpus: 2 waves 20.9 s,
-    # 4 waves 17.9 s, 8 waves 16.2 s (3 interleaved cold-JVM reps,
-    # BENCH/NOTES_r4.md §11). The same width serves the heavy
-    # span-exploded path, whose per-span rows are finer-grained still.
-    # Both paths hash-partition on the key columns themselves (one
-    # murmur3 hash mod buckets): a pre-bucketed key such as
+    # 2 task waves for both repartitions (see the module docstring).
+    # Both hash-partition on the key columns themselves (one murmur3
+    # hash mod buckets): a pre-bucketed key such as
     # pmod(xxhash64(doc_id), buckets) is hashed again by the
-    # partitioner, which maps the 32 bucket ids onto ~20 partitions.
-    buckets = parallelism * 8
+    # partitioner, which maps 32 bucket ids onto ~20 partitions.
+    buckets = parallelism * 2
     n_files = len(docs.inputFiles())
     salt = 0 < n_files < 4 * parallelism and max_media != 0
     split = max_media is None or max_media > heavy_threshold

@@ -215,8 +215,11 @@ def run_extract_job(
     parquet stand-in for an Iceberg ``bucket(n_buckets, doc_id)``
     partition spec — and committed in groups of ``group_size`` buckets,
     each group one atomic snapshot. On restart only uncommitted
-    buckets are scanned (filter on the bucket expression pushes to the
-    source scan).
+    buckets are processed, but every group re-scans the whole input:
+    the bucket filter is on the computed ``pmod(xxhash64(doc_id), n)``
+    column, which parquet cannot push down (the scan reads
+    ``PushedFilters: []``). ROADMAP item 2 makes the commit unit
+    something the scan can prune.
 
     ``fail_after_groups`` injects a crash for the resumability test;
     ``fail_point`` chooses whether it fires before the group's data

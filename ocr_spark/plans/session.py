@@ -6,6 +6,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ocr_spark.blaskernel import pin_threads
+
 
 def release_local_checkpoint(df) -> None:
     """Free the cached blocks behind a ``localCheckpoint``-ed DataFrame.
@@ -40,14 +42,7 @@ def build_session(
     # Spark, not from numpy. Without this, K concurrent workers each
     # spawning cpu_count() BLAS threads oversubscribe the box K-fold —
     # measured 5x slowdown at local[32] on the extraction kernels.
-    for var in (
-        "OMP_NUM_THREADS",
-        "OPENBLAS_NUM_THREADS",
-        "MKL_NUM_THREADS",
-        "NUMEXPR_NUM_THREADS",
-        "VECLIB_MAXIMUM_THREADS",
-    ):
-        os.environ.setdefault(var, "1")
+    pin_threads()
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"

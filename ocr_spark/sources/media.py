@@ -174,36 +174,50 @@ def box_probs_batch(items: list, weights: dict | None = None) -> list:
     ``weights``: the broadcast model-weights dict (sources/weights.py);
     None builds/reuses the process-local default (same values — the
     oracle transcription path). Returns per-item [T, C] matrices in
-    input order; a crop's matrix does not depend on the other items."""
-    from ocr_spark.functions.crnn import forward_probs_batch, render_label  # noqa: PLC0415
+    input order; a crop's matrix does not depend on the other items.
+
+    Crops are rendered lazily: every item's (label, seed) is read up
+    front, the items are grouped by label length (which fixes the
+    image shape), and each group is rendered and pushed through the
+    forward pass ``crnn._REC_BATCH`` crops at a time — the slices
+    ``forward_probs_batch`` would cut anyway. So at most one slice of
+    images (~70 KB each at 10 characters) is alive, however many pages
+    the call covers: the tracemalloc peak of one 256-document kernel
+    call over the perfbench ``mixed`` light documents is 77 MB, against
+    179 MB with every crop rendered before the forward pass."""
+    from ocr_spark.functions.crnn import (  # noqa: PLC0415
+        _REC_BATCH,
+        forward_probs_batch,
+        render_label,
+    )
+    from ocr_spark.functions.preclean import apply_preclean  # noqa: PLC0415
 
     if weights is None or "conv1" not in weights:
         from ocr_spark.sources.weights import default_weights  # noqa: PLC0415
 
         weights = default_weights()
-    labels: list[str] = []
-    seeds: list[int] = []
-    imgs: list[np.ndarray] = []
     preclean = weights.get("preclean")
-    if preclean:
-        from ocr_spark.functions.preclean import apply_preclean  # noqa: PLC0415
-    for page, bbox in items:
+    keys: list[tuple[str, int]] = []
+    by_len: dict[int, list[int]] = {}
+    for i, (page, bbox) in enumerate(items):
         label = read_label(page, bbox)
         seed = stable_seed(
             "probs", page.media_ref,
             int(bbox[0]), int(bbox[1]), int(bbox[2]), int(bbox[3]),
         )
-        img = render_label(label, seed=seed)
-        if preclean:
-            img = apply_preclean(img, preclean)
-        labels.append(label)
-        seeds.append(seed)
-        imgs.append(img)
-    probs = forward_probs_batch(imgs, weights)
-    return [
-        _inject_corruption(p, lab, np.random.default_rng(sd))
-        for p, lab, sd in zip(probs, labels, seeds)
-    ]
+        keys.append((label, seed))
+        by_len.setdefault(len(label), []).append(i)
+    out: list = [None] * len(items)
+    for idxs in by_len.values():
+        for s in range(0, len(idxs), _REC_BATCH):
+            chunk = idxs[s : s + _REC_BATCH]
+            imgs = [apply_preclean(render_label(*keys[i]), preclean) for i in chunk]
+            probs = forward_probs_batch(imgs, weights)
+            del imgs  # the next slice renders into the memory freed here
+            for i, p in zip(chunk, probs):
+                label, seed = keys[i]
+                out[i] = _inject_corruption(p, label, np.random.default_rng(seed))
+    return out
 
 
 # -- F22: crop-margin variants (fixture-gen recipe) --------------------------

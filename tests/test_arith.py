@@ -9,6 +9,7 @@ from ocr_spark.functions.arith import (
     digit_fix_count,
     eval_verdict,
     pair_concat_repair,
+    promote_problem,
     safe_eval,
     trim_repair,
 )
@@ -81,6 +82,17 @@ def test_pair_concat_repair():
 def test_digit_fix_count():
     # 2+1=3, 1+2=3, 1+1=2 — three single-digit fixes
     assert digit_fix_count("1+1=3") == 3
+
+
+def test_promote_problem():
+    # a head longer than 3 chars loses its first char; a label one
+    # digit away from 'right' is then kept without trying the trims
+    assert promote_problem("9234+5=239") == "234+5=239"
+    assert promote_problem("7+8=915") == "7+8=915"
+    # no single-digit fix: the trim variant with the most fixes wins
+    # (drop the last char, then the first)
+    assert promote_problem("7+8=159") == "7+8=15"
+    assert promote_problem("(7+8=15") == "7+8=15"
 
 
 def test_bracket_repair():

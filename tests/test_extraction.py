@@ -146,6 +146,37 @@ def test_null_text_span_is_dropped(kernel):
     pd.testing.assert_frame_equal(got, want)
 
 
+def test_recognition_renders_one_forward_slice_at_a_time(monkeypatch, docs):
+    """Worker memory stays flat in the chunk size: a rendered crop waits
+    for the forward pass with at most ``crnn._REC_BATCH - 1`` others,
+    however many pages one call recognizes."""
+    from ocr_spark.functions import crnn
+    from ocr_spark.operators.postprocess import extract_media_spans_batch
+    from ocr_spark.sources.weights import default_weights
+
+    weights = default_weights()  # built first: building renders crops too
+    render, conv = crnn.render_label, crnn.conv_features
+    live, peak, rendered = [0], [0], [0]
+
+    def counting_render(*args, **kwargs):
+        live[0] += 1
+        rendered[0] += 1
+        peak[0] = max(peak[0], live[0])
+        return render(*args, **kwargs)
+
+    def counting_conv(*args, **kwargs):
+        live[0] -= 1
+        return conv(*args, **kwargs)
+
+    monkeypatch.setattr(crnn, "render_label", counting_render)
+    monkeypatch.setattr(crnn, "conv_features", counting_conv)
+    refs = [s["media_ref"] for spans in docs[1] for s in spans if s["kind"] == "media"]
+    extract_media_spans_batch(refs[:96], weights)
+    assert rendered[0] > 2 * crnn._REC_BATCH
+    assert live[0] == 0
+    assert peak[0] <= crnn._REC_BATCH
+
+
 def test_broadcast_weights_flow_into_recognition():
     """The weights dict is a real input: the default (identity
     projection) reproduces the frozen outputs, and a permuted

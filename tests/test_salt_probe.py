@@ -91,9 +91,10 @@ def test_max_media_drops_heavy_arm(spark, layouts):
 
 
 def test_salted_light_path_fills_every_bucket(spark, tmp_path):
-    """The salt spreads documents over all of its buckets: hashing
-    pmod(xxhash64(doc_id), buckets) a second time left 12 of 32 empty."""
-    buckets = spark.sparkContext.defaultParallelism * 8
+    """The salt spreads documents over all of its 2x-cores buckets:
+    hashing pmod(xxhash64(doc_id), buckets) a second time left 12 of 32
+    empty at the former 8x-cores width."""
+    buckets = spark.sparkContext.defaultParallelism * 2
     corpus_df(spark, 1000).write.parquet(str(tmp_path / "docs"))
     out = extract(spark.read.parquet(str(tmp_path / "docs")), max_media=8)
     parts = out.groupBy(F.spark_partition_id().alias("p")).count().collect()
